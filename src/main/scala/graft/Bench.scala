@@ -154,10 +154,12 @@ object Bench {
     }
     val byName = ordered.toMap
     val paired = p1.zip(p2).map { case ((n, a), (_, b)) => (n, a, b) }
-    val noisy = paired.collect {
+    val noisySpread = paired.collect {
       case (n, a, b) if a > 0 && b > 0 &&
-        math.max(a, b) / math.min(a, b) > 2.0 && math.max(a, b) > 0.1 => n
+        math.max(a, b) / math.min(a, b) > 2.0 && math.max(a, b) > 0.1 =>
+        n -> math.max(a, b) / math.min(a, b)
     }
+    val noisy = noisySpread.map(_._1)
     val third = noisy.map(n => n -> timeOne(byName(n))).toMap
     val results = paired.map { case (n, a, b) =>
       val c = third.getOrElse(n, Double.MaxValue)
@@ -176,11 +178,12 @@ object Bench {
     // the r19 driver run flagged 47 noisy queries (~1.1 KB of names),
     // which ate the shared 1850-char budget and evicted 173 of 205
     // per-query timings from the parsed line — PERF was blind to
-    // five-sixths of the registry. Capped at 5 names, the noisy field
+    // five-sixths of the registry. Capped at the 5 widest-spread
+    // names (largest p1/p2 ratio first), the noisy field
     // is <= ~160 chars, so the 44-query baseline subset always fits by
     // construction. The COMPLETE list still ships in the `detail` line
     // and the full-map file; `noisy_n` announces the true count.
-    val noisyCapped = noisy.take(5).map("\"" + _ + "\"")
+    val noisyCapped = noisySpread.sortBy(-_._2).take(5).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
     // total spans successful queries only; failed ones are the -1.0
     // entries in the per-query map (don't let them subtract from it)

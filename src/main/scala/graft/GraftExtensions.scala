@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.Kernels
+import graft.stream.PartitionPreviewStrategy
 
 /** Session-extension hook: registers the engine's native expressions
   * into the SQL function registry, so `spark.sql("SELECT
@@ -17,15 +18,22 @@ import graft.functions.Kernels
   * the bridge — the message constructor is private[sql]) so SQL
   * callers get a positioned analysis error, not a raw
   * IllegalArgumentException escaping function resolution.
+  *
+  * It also injects the planner strategy of the ordered family's
+  * [[graft.stream.PartitionPreview]] node. The code that builds that
+  * node installs the same strategy itself, so sessions without the
+  * extension plan it too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     Kernels.all.foreach { k =>
       ext.injectFunction((
         FunctionIdentifier(k.sqlName),
         new ExpressionInfo(k.exprClass.getName, k.sqlName),
         k.build))
     }
+    ext.injectPlannerStrategy(_ => PartitionPreviewStrategy)
+  }
 }
 
 object GraftExtensions {

@@ -2397,7 +2397,7 @@ object SparkEntry {
          LEFT JOIN keep k ON k.doc_id = z.doc_id
          GROUP BY z.doc_id, z.n_tokens ORDER BY z.doc_id""",
     // c05: per-lang quality top-k — the window formulation is the
-    // oracle for the bounded-heap TopKAggregator path (identical
+    // oracle for the bounded-heap TopKRowsAgg path (identical
     // tie-break contract: quality desc, doc_id asc)
     "c05_quality_quota" ->
       """WITH q AS (

@@ -13,7 +13,9 @@ import org.apache.spark.sql.types._
   * semantics exactly: a shorter row contributes to its own dims only,
   * null elements are ignored per dim (min/max aggregate semantics),
   * a null array row contributes nothing, and a dimension that never
-  * saw a non-null value emits null. */
+  * saw a non-null value emits null. Values compare in Spark's order,
+  * where NaN is above every other double: a NaN is the maximum of any
+  * dim it appears in and the minimum only of an all-NaN dim. */
 private[graft] final class MinMaxState {
   var n = 0
   var mins: Array[Double] = Array.emptyDoubleArray
@@ -27,12 +29,15 @@ private[graft] final class MinMaxState {
     n = d
   }
 
+  /** `a` sorts strictly before `b` in Spark's order (NaN last). */
+  private def before(a: Double, b: Double): Boolean = a < b || (b.isNaN && !a.isNaN)
+
   def put(i: Int, v: Double): Unit = {
     grow(i + 1)
     if (!seen(i)) { seen(i) = true; mins(i) = v; maxs(i) = v }
     else {
-      if (v < mins(i)) mins(i) = v
-      if (v > maxs(i)) maxs(i) = v
+      if (before(v, mins(i))) mins(i) = v
+      if (before(maxs(i), v)) maxs(i) = v
     }
   }
 
@@ -43,8 +48,8 @@ private[graft] final class MinMaxState {
       if (o.seen(i)) {
         if (!seen(i)) { seen(i) = true; mins(i) = o.mins(i); maxs(i) = o.maxs(i) }
         else {
-          if (o.mins(i) < mins(i)) mins(i) = o.mins(i)
-          if (o.maxs(i) > maxs(i)) maxs(i) = o.maxs(i)
+          if (before(o.mins(i), mins(i))) mins(i) = o.mins(i)
+          if (before(maxs(i), o.maxs(i))) maxs(i) = o.maxs(i)
         }
       }
       i += 1

@@ -321,13 +321,15 @@ object Relational {
     * (distributed TakeOrdered — O(k) result, no corpus-wide pass;
     * indexing the full table and filtering pos < k afterwards costs
     * two full range shuffles for a 100-row answer), then indexes the
-    * k-row prefixes with the two-pass
-    * [[graft.stream.Ordered.withRowIndex]] and hash-joins on
-    * position; the inner join truncates at the shorter side exactly
-    * like builtin zip. The UNBOUNDED general form is
-    * [[graft.stream.Pipe.zipByIndex]], where the full parallel
-    * indexing is the right plan. Orders use (price desc, orderkey) so
-    * the order is TOTAL — a tie-ambiguous index would be
+    * k-row prefixes with [[graft.stream.Ordered.withRowIndex]] and
+    * hash-joins on position; the inner join truncates at the shorter
+    * side exactly like builtin zip. Each prefix is a TakeOrdered
+    * result: one partition, already sorted on the index order, so the
+    * planner adds no exchange or sort under the index node and the
+    * node runs no count pass — one job per side. The UNBOUNDED
+    * general form is [[graft.stream.Pipe.zipByIndex]], where the full
+    * parallel indexing is the right plan. Orders use (price desc,
+    * orderkey) so the order is TOTAL — a tie-ambiguous index would be
     * nondeterministic under re-execution. */
   def zipTopOrdersFirstCustomers(s: SparkSession, dir: String,
       k: Int = 100): DataFrame = {
@@ -478,8 +480,9 @@ object Relational {
     * Scale design (100 TB): NOT `ntile(10) OVER (ORDER BY …)` — an
     * un-partitioned window is a one-task global sort, dead at scale
     * (the e13 scaladoc's own words). Instead the exact rank comes
-    * from [[Ordered.withRowIndex]] (range-repartition + per-partition
-    * index offsets — fully parallel, one extra count job), and the
+    * from [[Ordered.withRowIndex]] (the planner's range exchange and
+    * sort, then a count pass over all partitions but the last and a
+    * per-partition offset map on `InternalRow` — fully parallel), and the
     * SQL-standard ntile remainder rule is replayed as index
     * arithmetic: with n rows, q = n div 10, r = n mod 10, the first
     * r buckets take q+1 rows, so row i (0-based) lands in bucket

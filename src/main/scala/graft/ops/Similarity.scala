@@ -164,8 +164,8 @@ object Similarity {
 
   /** Exact top-k like [[bruteForceTopK]] but on the scale path: the
     * codegen'd native [[graft.functions.CosineSimilarity]] expression
-    * scores pairs, and a bounded-heap
-    * [[graft.functions.TopKAggregator]] replaces the ranking window —
+    * scores pairs, and the bounded-heap [[TopKRowsAgg]] aggregate
+    * (via [[topKPerQuery]]) replaces the ranking window —
     * O(k) state and shuffle bytes per query instead of a full
     * per-group sort. Produces byte-identical results to
     * [[bruteForceTopK]] (same oracle). */

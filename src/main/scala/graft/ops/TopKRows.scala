@@ -9,12 +9,12 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Bounded top-k state: ids/scores kept sorted by (score desc, id
-  * asc), capped at k — the EXACT insert semantics of the typed
-  * [[graft.functions.TopKAggregator]] (its sorted-`List` reduce),
-  * restated over primitive arrays so the aggregate below can read
-  * `InternalRow`s directly. The kept set (top-k by that total order)
-  * and its emitted order are unique regardless of arrival order, so
-  * the two formulations are value-identical by construction. */
+  * asc), capped at k, over primitive arrays so the aggregate below
+  * reads `InternalRow`s directly. The kept set (top-k by that total
+  * order) and its emitted order are unique regardless of arrival
+  * order. It replaced a typed `Aggregator` (a sorted-`List` reduce),
+  * which now lives in the tests as the model TopKRowsSpec pins it
+  * against. */
 private[graft] final class TopKState(val k: Int) {
   var n = 0
   val ids = new Array[Long](k)
@@ -37,8 +37,8 @@ private[graft] final class TopKState(val k: Int) {
 }
 
 /** Native bounded-heap top-k aggregate — `TypedImperativeAggregate`
-  * over [[TopKState]], the kernel form of
-  * [[graft.functions.TopKAggregator]]. Input: (id LONG, score DOUBLE)
+  * over [[TopKState]], the kernel form of the typed top-k
+  * `Aggregator` it replaced. Input: (id LONG, score DOUBLE)
   * child expressions; output: `array<struct<id,score>>` sorted
   * (score desc, id asc), capped at k.
   *

@@ -100,7 +100,7 @@ object Flow {
     * out — the cap would be divided by 2 but run 64-wide, OVERSHOOTING
     * the global rate ~32×). A rate cap protecting a fragile external
     * service must never overshoot: on elastic clusters pass
-    * `maxConcurrent = ds.rdd.getNumPartitions` (the pre-r5 behavior —
+    * `maxConcurrent` = the dataset's partition count (the pre-r5 behavior —
     * undershoots when partitions exceed cores, but is a guaranteed
     * upper bound on concurrency). */
   def throttledForeach[T](ds: Dataset[T], globalPerSecond: Double,
@@ -109,22 +109,22 @@ object Flow {
       effect: T => Unit): Unit = {
     require(globalPerSecond > 0 || globalPerMinute > 0 || globalPerHour > 0 ||
       globalIntervalMs > 0, "at least one rate bound required")
-    val sc = ds.sparkSession.sparkContext
-    val slots = if (maxConcurrent > 0) maxConcurrent else sc.defaultParallelism
-    val parts = math.max(1, ds.rdd.getNumPartitions)
-    // every bound shares the same way: rates divide by the concurrent
-    // slot count, a min-interval (an inverse rate) multiplies by it —
-    // most-restrictive-wins then happens inside each partition's
-    // RateLimiter, matching the reference's composed per-bound
-    // iterators (streamable/functions.py:194-203)
-    def share(global: Double) =
-      if (global > 0) partitionShare(global, parts, slots) else 0.0
-    val conc = math.max(1, math.min(parts, slots))
-    val perPartitionInterval = globalIntervalMs * conc
-    val (ps, pm, ph) =
-      (share(globalPerSecond), share(globalPerMinute), share(globalPerHour))
+    val slots =
+      if (maxConcurrent > 0) maxConcurrent else ds.sparkSession.sparkContext.defaultParallelism
     ds.foreachPartition { (it: Iterator[T]) =>
-      val rl = new RateLimiter(ps, perPartitionInterval, pm, ph)
+      // read from the running task, so `ds` needs no RDD view to
+      // learn its partition count
+      val parts = math.max(1, org.apache.spark.TaskContext.get().numPartitions())
+      // every bound shares the same way: rates divide by the concurrent
+      // slot count, a min-interval (an inverse rate) multiplies by it —
+      // most-restrictive-wins then happens inside each partition's
+      // RateLimiter, matching the reference's composed per-bound
+      // iterators (streamable/functions.py:194-203)
+      def share(global: Double) =
+        if (global > 0) partitionShare(global, parts, slots) else 0.0
+      val conc = math.max(1, math.min(parts, slots))
+      val rl = new RateLimiter(share(globalPerSecond), globalIntervalMs * conc,
+        share(globalPerMinute), share(globalPerHour))
       it.foreach { t => rl.acquire(); effect(t) }
     }
   }

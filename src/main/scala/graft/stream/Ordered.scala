@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -15,33 +15,30 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale note (100 TB): `Window.orderBy(ord)` with no partitionBy
   * collapses to a single task. The global-order primitives here
-  * instead use [[withRowIndex]] — range-repartition on the ordering
-  * key, sort within partitions, then a two-pass per-partition-offset
-  * index (the classic zipWithIndex pattern): fully parallel, one extra
-  * count job, no single-task bottleneck. Key-partitioned ops
-  * ([[firstWins]], [[distinctConsecutivePerKey]]) use partitioned
-  * windows and need no global pass at all.
+  * ([[withRowIndex]], [[distinctConsecutive]]) instead run one
+  * [[PartitionPreview]] node: it requires its child range-distributed
+  * and sorted on `ord`, so the planner adds a range exchange and a
+  * sort only when the child is not ordered already (the plan of
+  * Spark's own global sort), then one job over all partitions but the
+  * last (row counts, or last keys) seeds a per-partition map — fully
+  * parallel, no single-task bottleneck. An already-ordered
+  * single-partition child (`orderBy(...).limit(k)`) gets no exchange
+  * and no such job.
+  * Key-partitioned ops ([[firstWins]], [[distinctConsecutivePerKey]])
+  * use partitioned windows and need no global pass at all.
   */
 object Ordered {
 
   /** Global 0-based row index by `ord` — the scalable replacement for
-    * `row_number() OVER (ORDER BY ord)`. Range-partitions by the
-    * ordering key (so partitions are contiguous runs), sorts within
-    * partitions, then assigns indices with per-partition offsets.
+    * `row_number() OVER (ORDER BY ord)`. Rows are range-partitioned
+    * and sorted by `ord` (only if the child is not already), then
+    * indexed with per-partition offsets on `InternalRow`. Ties in
+    * `ord` get distinct indices in an unspecified order; the index is
+    * dense either way.
     */
   def withRowIndex(df: DataFrame, ord: Seq[Column],
-      idxCol: String = "_ord_idx"): DataFrame = {
-    val spark = df.sparkSession
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val sorted = df.repartitionByRange(parts, ord: _*).sortWithinPartitions(ord: _*)
-    val schema = sorted.schema.add(idxCol, LongType, nullable = false)
-    // zipWithIndex runs one count-job over all partitions but the last,
-    // then maps with offsets — no data moves, no single task.
-    val out = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ i)
-    }
-    spark.createDataFrame(out, schema)
-  }
+      idxCol: String = "_ord_idx"): DataFrame =
+    PartitionPreview.rowIndex(df, ord, idxCol)
 
   /** Drop the first `n` rows in `ord` order; reference `skip(count=n)`
     * (streamable/stream.py:432-446, iterators.py:283-299). */
@@ -184,47 +181,12 @@ object Ordered {
     * previous row's key in `ord` order; reference
     * `distinct(consecutive_only=True)` (iterators.py:117-133, O(1)
     * state). NOT a global `Window.orderBy` (that collapses to one
-    * task): rows get a dense global index (parallel two-pass), then a
-    * self-equi-join on idx-1 supplies each row's predecessor key —
-    * every stage shuffle-parallel. */
-  def distinctConsecutive(df: DataFrame, ord: Seq[Column], key: Column): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sorted = df.withColumn("_k", key)
-      .repartitionByRange(parts, ord: _*).sortWithinPartitions(ord: _*)
-    val schema = sorted.schema
-    val kIdx = schema.fieldIndex("_k")
-    // NOT checkpointed: pass 2 re-runs only the reduce-side sort (the
-    // range shuffle's map outputs are reused), and materializing the
-    // sorted partitions costs as much as re-sorting them — measured a
-    // wash at sf0.1, and skipping the truncated-lineage block keeps
-    // the op fault-tolerant on executor loss
-    val rdd = sorted.rdd
-    // pass 1: last key of each partition (O(partitions) driver data)
-    val lastKeys: Map[Int, Any] = rdd.mapPartitionsWithIndex { (i, it) =>
-      var last: Any = null; var has = false
-      it.foreach { r => last = r.get(kIdx); has = true }
-      if (has) Iterator((i, last)) else Iterator.empty
-    }.collect().toMap
-    val bc = spark.sparkContext.broadcast(lastKeys)
-    // pass 2: within-partition consecutive filter; each partition's
-    // head compares against the nearest non-empty predecessor's last
-    val filtered = rdd.mapPartitionsWithIndex { (i, it) =>
-      val lk = bc.value
-      val predecessor = (i - 1 to 0 by -1).collectFirst {
-        case j if lk.contains(j) => lk(j)
-      }
-      var hasPrev = predecessor.isDefined
-      var prev: Any = predecessor.orNull
-      it.filter { r =>
-        val k = r.get(kIdx)
-        val keep = !hasPrev || k != prev
-        prev = k; hasPrev = true
-        keep
-      }
-    }
-    spark.createDataFrame(filtered, schema).drop("_k")
-  }
+    * task): one [[PartitionPreview]] pass takes the last key of every
+    * partition but the last, then each partition filters its rows
+    * against its own previous key, its head against the nearest
+    * non-empty predecessor's last key. Consecutive nulls collapse. */
+  def distinctConsecutive(df: DataFrame, ord: Seq[Column], key: Column): DataFrame =
+    PartitionPreview.distinctConsecutive(df, ord, key)
 
   /** Consecutive dedup within `part` (runs never span partitions) —
     * the shuffle-parallel variant. */

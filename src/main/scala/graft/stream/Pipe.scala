@@ -1,6 +1,8 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.functions.{col, struct}
 
 /** Typed fluent pipeline mirroring the reference `Stream[T]` algebra
   * (reference: streamable/stream.py:51-511) as a thin wrapper over
@@ -72,17 +74,25 @@ final case class Pipe[T](ds: Dataset[T], chain: List[String] = Nil) {
 
   /** Pairwise zip by position in `ord`-free index order — the
     * reference defers to builtin `zip` (README.md:481-497); Spark has
-    * no positional identity, so both sides are indexed per-partition
-    * with `zipWithIndex` semantics and hash-joined on the index. For
-    * ordered zips, index both sides with [[Ordered.withRowIndex]]
-    * first and join on that. */
-  def zipByIndex[U](other: Pipe[U])(
-      implicit e: Encoder[(T, U)], ct: scala.reflect.ClassTag[T],
-      cu: scala.reflect.ClassTag[U]): Pipe[(T, U)] = {
-    import org.apache.spark.rdd.RDD.rddToPairRDDFunctions
-    val left = ds.rdd.zipWithIndex().map(_.swap)
-    val right = other.ds.rdd.zipWithIndex().map(_.swap)
-    derive(ds.sparkSession.createDataset(left.join(right).values),
+    * no positional identity, so each side gets a [[PartitionPreview]]
+    * row index in partition order (`zipWithIndex` semantics: one count
+    * pass over all partitions but the last, none for a single
+    * partition) and the two sides equi-join on it; the inner join
+    * stops at the shorter side like builtin zip. For ordered zips,
+    * index both sides with [[Ordered.withRowIndex]] first and join on
+    * that. */
+  def zipByIndex[U](other: Pipe[U])(implicit e: Encoder[(T, U)]): Pipe[(T, U)] = {
+    val idx = "_zip_idx"
+    // one column per side, shaped the way the tuple encoder reads it:
+    // the single value column of a flat type, a struct otherwise
+    def side(d: Dataset[_], name: String): DataFrame = {
+      val cols = d.columns.map(c => col(s"`${c.replace("`", "``")}`"))
+      val value =
+        if (encoderFor(d.encoder).isSerializedAsStructForTopLevel) struct(cols: _*)
+        else cols.head
+      PartitionPreview.rowIndex(d.toDF(), Nil, idx).select(value.as(name), col(idx))
+    }
+    derive(side(ds, "_1").join(side(other.ds, "_2"), idx).select("_1", "_2").as[(T, U)],
       "zip(<pipe>)")
   }
 

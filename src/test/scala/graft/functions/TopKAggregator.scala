@@ -7,7 +7,9 @@ import org.apache.spark.sql.expressions.Aggregator
 final case class Scored(id: Long, score: Double)
 
 /** Bounded-heap top-k typed aggregate (`Aggregator[IN, BUF, OUT]`,
-  * the SURVEY §2.10 extension rung).
+  * the SURVEY §2.10 extension rung). No query runs it any more: the
+  * native [[graft.ops.TopKRowsAgg]] replaced it, and it stays here as
+  * the model TopKRowsSpec and FunctionsSpec pin that kernel against.
   *
   * The window formulation (`row_number over (partition by q order by
   * score desc)`) must SORT every candidate of a group before cutting

@@ -71,4 +71,54 @@ class MinMaxVecSpec extends SparkSpec {
     val d = kernel(rows.map(_.map(_.toDouble)).toDF("emb"))
     assert(f == d)
   }
+
+  test("NaN follows Spark's order, like the posexplode/min/max twin, " +
+      "under both codegen and interpreted eval") {
+    // a NaN seen first must not stick as the minimum: NaN sorts above
+    // every double, so it is the max of its dim and the min only of an
+    // all-NaN dim
+    val nan = Double.NaN
+    val df = Seq(
+      Seq(nan, 1.0, nan, 2.0),
+      Seq(3.0, nan, nan, -1.0),
+      Seq(-2.0, 0.5, nan, Double.PositiveInfinity)
+    ).toDF("emb").coalesce(1)
+    def twin(): Seq[(Double, Double)] =
+      df.select(posexplode(col("emb")).as(Seq("dim", "v")))
+        .groupBy("dim").agg(min("v"), max("v")).orderBy("dim")
+        .collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq
+    // one partition exercises put; three exercise mergeFrom too
+    def mm(d: org.apache.spark.sql.DataFrame): Seq[(Double, Double)] = {
+      val r = d.groupBy().agg(MinMaxVec(col("emb")).as("mm"))
+        .select(col("mm.mins"), col("mm.maxs")).collect().head
+      r.getSeq[Double](0).zip(r.getSeq[Double](1))
+    }
+    // java.lang.Double equality: NaN equals NaN, which `==` denies
+    def same(a: Seq[(Double, Double)], b: Seq[(Double, Double)]) =
+      a.size == b.size && a.zip(b).forall { case ((x1, y1), (x2, y2)) =>
+        x1.equals(x2) && y1.equals(y2)
+      }
+    val expected = Seq((-2.0, nan), (0.5, nan), (nan, nan),
+      (-1.0, Double.PositiveInfinity))
+    val conf = spark.conf
+    val prevFallback = conf.getOption("spark.sql.codegen.fallback")
+    val prevFactory = conf.getOption("spark.sql.codegen.factoryMode")
+    try {
+      Seq("CODEGEN_ONLY" -> "false", "NO_CODEGEN" -> "true").foreach { case (mode, fallback) =>
+        conf.set("spark.sql.codegen.fallback", fallback)
+        conf.set("spark.sql.codegen.factoryMode", mode)
+        val want = twin()
+        assert(same(want, expected), s"$mode: twin $want")
+        Seq(df, df.repartition(3)).foreach { d =>
+          val got = mm(d)
+          assert(same(got, want), s"$mode: kernel $got vs twin $want")
+        }
+      }
+    } finally {
+      prevFallback.fold(conf.unset("spark.sql.codegen.fallback"))(
+        conf.set("spark.sql.codegen.fallback", _))
+      prevFactory.fold(conf.unset("spark.sql.codegen.factoryMode"))(
+        conf.set("spark.sql.codegen.factoryMode", _))
+    }
+  }
 }

@@ -1,6 +1,10 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.stream.{PartitionPreview, PartitionPreviewExec, Pipe}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Physical-plan quality gates — the properties that decide whether a
   * query survives a 100× scale-up: filters reach the parquet scan,
@@ -134,7 +138,7 @@ class PlanSpec extends SparkSpec {
     // the predicate reaches the SCAN (PushedFilters), so qualifying
     // candidates are selected before any join or ranking operator —
     // post-filtering a fixed-k result would show the filter ABOVE the
-    // TopKAggregator instead (the starvation trap)
+    // TopKRowsAgg instead (the starvation trap)
     assert(p.contains("EqualTo(label,2)"),
       s"label predicate must be pushed into the index scan:\n$p")
     assert(p.toLowerCase.contains("dynamicpruning"),
@@ -180,7 +184,7 @@ class PlanSpec extends SparkSpec {
   test("ANN ranking uses the bounded-heap aggregate, never a window sort") {
     // s01 keeps the window formulation as the didactic baseline; every
     // scale-path ranker (s02 LSH, s04 native, s05 IVF — including the
-    // IVF probe selection) must plan the O(k) TopKAggregator instead:
+    // IVF probe selection) must plan the O(k) TopKRowsAgg instead:
     // a per-query window sorts ALL candidates of a hot query before
     // cutting at k, which at 100 TB is a spilling sort, not a pipeline.
     Seq("s02" -> Similarity.lshTopK(spark, sf0001),
@@ -739,4 +743,60 @@ class PlanSpec extends SparkSpec {
     // codegen stages render as "*(n)" markers in the plan string
     assert(p.contains("*(1)"), s"no codegen span in:\n$p")
   }
+
+  test("ordered family stays in Catalyst: q07/q09/q16/q31/q37 and zipByIndex " +
+      "plan the row-index node, with no RDD round trip") {
+    val s = spark
+    import s.implicits._
+    val zipped = Pipe(s.range(0, 5, 1, 2).as[Long])
+      .zipByIndex(Pipe(s.createDataset(Seq("a", "b", "c")))).ds.toDF()
+    val frames = Seq(
+      "q07" -> Relational.skipTakeOrders(spark, sf0001),
+      "q09" -> Relational.distinctConsecutiveFlags(spark, sf0001),
+      "q16" -> Relational.chunkedLineitem(spark, sf0001),
+      "q31" -> Relational.zipTopOrdersFirstCustomers(spark, sf0001),
+      "q37" -> Relational.orderPriceDeciles(spark, sf0001),
+      "zipByIndex" -> zipped)
+    val roundTrip = Set("LogicalRDD", "ExternalRDD", "SerializeFromObject")
+    frames.foreach { case (name, df) =>
+      val optimized = df.queryExecution.optimizedPlan
+      val bad = optimized.collectWithSubqueries {
+        case n if roundTrip.contains(n.nodeName) => n.nodeName
+      }
+      assert(bad.isEmpty, s"$name leaves Catalyst through $bad:\n$optimized")
+      assert(optimized.exists(_.isInstanceOf[PartitionPreview]),
+        s"$name does not plan the row-index node:\n$optimized")
+    }
+  }
+
+  test("q31: no range exchange under the row-index nodes (TakeOrdered feeds them)") {
+    val df = Relational.zipTopOrdersFirstCustomers(spark, sf0001)
+    df.collect()
+    val nodes = AqeNodes.collect(df.queryExecution.executedPlan) {
+      case p: PartitionPreviewExec => p
+    }
+    assert(nodes.size == 2, s"expected one index node per side, got ${nodes.size}")
+    nodes.foreach { n =>
+      val ranges = AqeNodes.collect(n.child) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranges.isEmpty, s"range exchange under the index node:\n$n")
+    }
+  }
+
+  test("graft.stream leaves Catalyst nowhere: no .rdd, createDataFrame or Row.fromSeq") {
+    val dir = new java.io.File("src/main/scala/graft/stream")
+    val files = Option(dir.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".scala"))
+    assert(files.nonEmpty, s"no sources under ${dir.getAbsolutePath}")
+    val hits = for {
+      f <- files
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+      if !line.trim.startsWith("import ") &&
+        Seq(".rdd", "createDataFrame", "Row.fromSeq").exists(line.contains)
+    } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
+
+/** Walks adaptive plans into their query stages. */
+private object AqeNodes extends AdaptiveSparkPlanHelper

@@ -150,6 +150,25 @@ class PipeSpec extends SparkSpec {
     val b = Pipe(s.createDataset(Seq("a", "b", "c")).repartition(1).sortWithinPartitions("value").as[String])
     val got = a.zipByIndex(b).ds.collect().sortBy(_._1).toList
     assert(got == List((1, "a"), (2, "b"), (3, "c")))
+    // unequal lengths and partition counts: positions follow partition
+    // order, the longer side is cut at the shorter; 8 slices over 3
+    // rows leave partitions empty
+    val long = Pipe(s.range(0, 10, 1, 3).as[Long])
+    val short = Pipe(s.range(0, 4, 1, 2).map(i => "abcd".substring(i.toInt, i.toInt + 1)))
+    val sparse = Pipe(s.range(0, 3, 1, 8).as[Long])
+    assert(long.zipByIndex(short).ds.collect().sortBy(_._1).toList ==
+      List((0L, "a"), (1L, "b"), (2L, "c"), (3L, "d")))
+    assert(short.zipByIndex(long).ds.collect().sortBy(_._2).toList ==
+      List(("a", 0L), ("b", 1L), ("c", 2L), ("d", 3L)))
+    assert(sparse.zipByIndex(long).ds.collect().sortBy(_._1).toList ==
+      List((0L, 0L), (1L, 1L), (2L, 2L)))
+    // a pipe zipped with itself pairs each element with itself
+    assert(long.zipByIndex(long).ds.collect().sortBy(_._1).toList ==
+      (0L until 10L).map(i => (i, i)).toList)
+    // struct-encoded elements ride through as structs
+    val pairs = Pipe(s.range(0, 3, 1, 2).map(i => (i, i * 10)))
+    assert(pairs.zipByIndex(short).ds.collect().sortBy(_._1._1).toList ==
+      List(((0L, 0L), "a"), ((1L, 10L), "b"), ((2L, 20L), "c")))
   }
 
   test("explain renders the plan") {
