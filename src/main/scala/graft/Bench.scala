@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -102,30 +103,17 @@ object Bench {
     require(missingBaseline.isEmpty,
       s"baselineSet drift — queries gone from the registry: ${missingBaseline.toSeq.sorted.mkString(",")}")
     spark.range(1000).repartition(4).count()
-    // persisted-index setup (s11/s22, d18): build outside any timed
-    // pass. A failed build is survivable (the queries rebuild inline)
-    // but must be VISIBLE — a swallowed exception here surfaces only
-    // as an unexplained s11/d18 timing anomaly downstream.
-    try graft.ops.Similarity.ensureIvfIndex(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureIvfIndex failed — s11/s22 will pay index training inside their timed pass: $e") }
-    try graft.ops.Similarity.ensureSemanticIndex(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureSemanticIndex failed — d18 will pay index training inside its timed pass: $e") }
-    try graft.ops.Similarity.ensureCodebook(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureCodebook failed — the trained-codebook families (s06/s07/s31/s32/d12/d13/s13/c13) will pay Lloyd training inside their timed pass: $e") }
-    try graft.ops.Similarity.ensureTrainedIvfIndex(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureTrainedIvfIndex failed — s33/s34 will pay the index build inside their timed pass: $e") }
-    try graft.ops.TextAnalysis.ensureBpeModel(spark, sfDir)
-    catch { case e: Throwable => System.err.println(
-      s"[bench] WARN ensureBpeModel failed — the tokenizer families (t18/t19/t20/c20/c22) will pay BPE training inside their timed pass: $e") }
+    // persisted artifacts: built outside any timed pass. A failed
+    // build is survivable (the queries rebuild inline) but must be
+    // VISIBLE — a swallowed exception here surfaces only as an
+    // unexplained timing anomaly downstream.
+    Harness.ensureArtifacts(spark, sfDir, "bench",
+      "will pay the build inside their timed pass")
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (n, _) => skipped.contains(n) }
       .filter { case (n, _) => only.forall(_.contains(n)) }
     ordered.foreach { case (_, fn) =>
-      try { consume(fn(spark, sfDir)) } catch { case _: Throwable => }
+      try consume(fn(spark, sfDir)) catch { case NonFatal(_) => }
       spark.catalog.clearCache()
     }
     // A query that throws records -1.0 (NOT its elapsed-to-exception
@@ -133,7 +121,7 @@ object Bench {
     // success in the JSON, and min-of-passes must not launder it.
     def steadyPass(): Seq[(String, Double)] = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { consume(fn(spark, sfDir)); true } catch { case _: Throwable => false }
+      val ok = try { consume(fn(spark, sfDir)); true } catch { case NonFatal(_) => false }
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       spark.catalog.clearCache()
       name -> dt
@@ -148,7 +136,7 @@ object Bench {
     // reader knows which numbers carried host contention.
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      val ok = try { consume(fn(spark, sfDir)); true } catch { case _: Throwable => false }
+      val ok = try { consume(fn(spark, sfDir)); true } catch { case NonFatal(_) => false }
       spark.catalog.clearCache()
       if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
@@ -233,7 +221,7 @@ object Bench {
       s"""{"schema":"graft-bench-full-v1","total":${r3(total)},"unit":"sec","n":${results.count(_._2 >= 0)},"passes":$passes,"consume":"$consumeMode",$onlyJson"skipped":$skippedJson,"noisy":$noisyJson,"queries":$qs,"spread":$spreadJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullOut),
       (fullJson + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] full-map write to $fullOut failed: $e") }
     // Output order is load-bearing: large diagnostic maps FIRST, the
     // tail-window-sized headline line LAST so it survives capture.

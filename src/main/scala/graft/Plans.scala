@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Plan dump for the optimization rounds: writes `.explain("formatted")`
   * output for named registry queries to files, one per query, under the
   * same session config the bench uses — so the committed before/after
@@ -31,21 +32,10 @@ object Plans {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // same pre-built artifacts as Bench: the plans must describe the
-    // artifact-served reads the bench times, not inline rebuilds.
-    // NonFatal only, and LOUD: a plan pair dumped without artifacts
-    // silently describes inline-rebuild plans — the drift this tool
-    // exists to prevent — so a failed build must be visible in the
-    // dump log.
-    def setup(name: String)(build: => Unit): Unit =
-      try build catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[plans] WARN $name failed — dumped plans " +
-          s"describe INLINE-REBUILD shapes for its queries: $e")
-      }
-    setup("ensureIvfIndex")(graft.ops.Similarity.ensureIvfIndex(spark, sfDir))
-    setup("ensureSemanticIndex")(graft.ops.Similarity.ensureSemanticIndex(spark, sfDir))
-    setup("ensureCodebook")(graft.ops.Similarity.ensureCodebook(spark, sfDir))
-    setup("ensureTrainedIvfIndex")(graft.ops.Similarity.ensureTrainedIvfIndex(spark, sfDir))
-    setup("ensureBpeModel")(graft.ops.TextAnalysis.ensureBpeModel(spark, sfDir))
+    // artifact-served reads the bench times, not inline rebuilds — a
+    // failed build must be visible in the dump log
+    Harness.ensureArtifacts(spark, sfDir, "plans",
+      "get dumped with INLINE-REBUILD plan shapes")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -54,7 +44,7 @@ object Plans {
           val txt = df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[plans] $name failed: ${e.getMessage}")
         }
         spark.catalog.clearCache()

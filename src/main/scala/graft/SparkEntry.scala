@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.functions.col
 import graft.ops._
+import graft.ops.Similarity.AnnRead
+import graft.ops.Similarity.AnnRead.{At, Current, Router, Trained}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -295,9 +298,9 @@ object SparkEntry {
     "s02_lsh_topk" -> ((s: SparkSession, dir: String) => Similarity.lshTopK(s, dir)),
     "s03_label_stats" -> (Similarity.labelCentroidStats _),
     "s04_native_topk" -> ((s: SparkSession, dir: String) => Similarity.nativeTopK(s, dir)),
-    "s05_ivf_topk" -> ((s: SparkSession, dir: String) => Similarity.ivfTopK(s, dir)),
+    "s05_ivf_topk" -> AnnRead(),
     "s06_kmeans_codebook" -> ((s: SparkSession, dir: String) => Similarity.kmeansCodebook(s, dir)),
-    "s07_ivf_trained" -> ((s: SparkSession, dir: String) => Similarity.ivfTopKTrained(s, dir)),
+    "s07_ivf_trained" -> AnnRead(codebook = Trained()),
     "s08_sq_topk" -> ((s: SparkSession, dir: String) => Similarity.sqTopK(s, dir)),
     "s09_pq_topk" -> ((s: SparkSession, dir: String) => Similarity.pqTopK(s, dir)),
     "s10_filtered_topk" -> ((s: SparkSession, dir: String) => Similarity.filteredTopK(s, dir)),
@@ -310,12 +313,11 @@ object SparkEntry {
     // when the index exists); results are identical to s05 by
     // construction, so the s05 oracle certifies the persisted path too
     "s11_ivf_indexed" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfTopKIndexed(s, dir, Similarity.ensureIvfIndex(s, dir))),
+      AnnRead(layout = At(Similarity.ensureIvfIndex(s, dir)))(s, dir)),
     // s20: two-level routed IVF — the query ranks ncoarse=8 coarse
     // cells then only the routed subset of the 32 fine centroids,
     // instead of all 32; the corpus-side plan is s05's unchanged
-    "s20_ivf2_topk" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopK(s, dir)),
+    "s20_ivf2_topk" -> AnnRead(router = Some(Router())),
     // s21: router recall curve vs the ONE-LEVEL IVF baseline — the
     // cprobe=8 row must read exactly 1000 (s20's exhaustive-router
     // identity, oracle-certified every gate run)
@@ -325,22 +327,23 @@ object SparkEntry {
     // over the persisted partition-pruned index layout (s11); results
     // identical to s20 by construction, certified by the shared oracle
     "s22_routed_indexed" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKIndexed(s, dir, Similarity.ensureIvfIndex(s, dir))),
+      AnnRead(layout = At(Similarity.ensureIvfIndex(s, dir)),
+        router = Some(Router()))(s, dir)),
     // s26: index FRESHNESS — deletes as a broadcast tombstone
     // anti-join on the persisted index's candidate stream (the LSM
     // shape: immutable index files + a small delete table until
     // compaction); the vec_id ≡ 3 (mod 7) slice is deterministic
     // and provably hits live top-k lists
     "s26_ivf_tombstoned" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfTopKTombstoned(s, dir, Similarity.ensureIvfIndex(s, dir))),
+      AnnRead(layout = At(Similarity.ensureIvfIndex(s, dir)),
+        tombstones = true)(s, dir)),
     // s27: COMPACTION — tombstones folded into a fresh immutable
     // layout (one anti-join + one partitionBy(cell) rewrite, no
     // retraining), after which the plain s11 read path applies with
     // no per-query tombstone join; ≡ s26 by construction, certified
     // by the shared oracle (the s11/s22 pattern)
     "s27_ivf_compacted" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfTopKIndexed(s, dir,
-        Similarity.ensureCompactedIvfIndex(s, dir))),
+      AnnRead(layout = At(Similarity.ensureCompactedIvfIndex(s, dir)))(s, dir)),
     // s28: the EPOCH-RESOLVED read — ensureCompactedIvfIndex flips
     // the CURRENT pointer, so this resolves to the PLAIN read over
     // the compacted layout (no per-query tombstone join in the
@@ -348,7 +351,7 @@ object SparkEntry {
     // IvfIndexSpec pins both sides of the switch
     "s28_ivf_epoch" -> ((s: SparkSession, dir: String) => {
       Similarity.ensureCompactedIvfIndex(s, dir)
-      Similarity.ivfTopKCurrent(s, dir)
+      AnnRead(layout = Current)(s, dir)
     }),
     // s29: the epoch-resolved ROUTED read — s22's recommended
     // production query shape given the s28 freshness lifecycle
@@ -356,8 +359,7 @@ object SparkEntry {
     // /compact after); rows identical either side by construction,
     // so ONE tombstoned-s20 oracle certifies whichever epoch the
     // gate finds; IvfIndexSpec pins both plan shapes + row identity
-    "s29_routed_current" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKCurrent(s, dir)),
+    "s29_routed_current" -> AnnRead(layout = Current, router = Some(Router())),
     // s30: FILTERED search on the production path — s10's metadata
     // pre-filter composed into the epoch-resolved routed read: the
     // predicate lands on the v2 index layout's in-row label column
@@ -366,14 +368,14 @@ object SparkEntry {
     // result (the starvation trap s10's oracle certifies against);
     // PlanSpec pins the pushed filter, IvfIndexSpec pins parity
     // across the epoch flip with the filter on
-    "s30_filtered_routed" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKCurrentFiltered(s, dir)),
+    "s30_filtered_routed" -> AnnRead(layout = Current,
+      router = Some(Router()), filter = Some(col("label") === 2)),
     // s31: routing over the TRAINED codebook — the s07 → s20
     // composition: the persisted Lloyd codebook (ensureCodebook) as
     // the router's fine level; with cprobe = ncoarse this reduces to
-    // s07 exactly (SimilaritySpec pins the identity)
-    "s31_routed_trained" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKTrained(s, dir)),
+    // s07 exactly (OpsSpec pins the identity)
+    "s31_routed_trained" -> AnnRead(codebook = Trained(),
+      router = Some(Router())),
     // s32: the codebook-artifact datasheet — ensure → read → describe
     // inside a pure query; the oracle RETRAINS the codebook (unrolled
     // Lloyd) and must land on the identical row: persisted ≡
@@ -382,34 +384,41 @@ object SparkEntry {
       Similarity.codebookDatasheet(s, dir)),
     // s33: the COMPLETE production stack — persisted trained codebook
     // + persisted trained-cell DPP-pruned layout + router + exact
-    // verify; ≡ s31 by construction (one buildIvfIndexWith body, one
-    // routedFineProbes), so s31's retraining oracle certifies it
+    // verify; ≡ s31 by construction (the layout's cells are the
+    // per-query trained assignment), so s31's retraining oracle
+    // certifies it
     "s33_trained_indexed" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKTrainedIndexed(s, dir)),
+      AnnRead(codebook = Trained(),
+        layout = At(Similarity.ensureTrainedIvfIndex(s, dir)),
+        router = Some(Router()))(s, dir)),
     // s34: s30's metadata pre-filter on the TRAINED stack — the label
     // predicate pushed into the trained layout's DPP-pruned scan,
     // filter-before-heap; filter capability symmetric across both
-    // index families through the one ivf2IndexedScan seam
+    // index families through the one AnnRead body
     "s34_filtered_trained" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKTrainedFiltered(s, dir)),
+      AnnRead(codebook = Trained(),
+        layout = At(Similarity.ensureTrainedIvfIndex(s, dir)),
+        router = Some(Router()),
+        filter = Some(col("label") === 2))(s, dir)),
     // s35: the trained family's freshness lifecycle — tombstoned reads
     // over the persisted trained layout pre-flip, plain compacted read
     // after its own _CURRENT flips; ONE tombstoned-s31 oracle valid in
     // both epochs (the s29 pattern, now symmetric across families)
-    "s35_trained_current" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKTrainedCurrent(s, dir)),
+    "s35_trained_current" -> AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router())),
     // s36: THE production read — trained codebook + trained DPP-pruned
     // layout + router + pushed metadata filter + freshness, one query;
     // oracle = s31's trained text + tombstone + label membership
-    "s36_production_read" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKProduction(s, dir)),
+    "s36_production_read" -> AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()), filter = Some(col("label") === 2)),
     // s37: the fresh-ingest SHADOW read — ids re-ingested since the
     // last index build leave the index's candidate stream (broadcast
     // anti-join) and their updated buffer rows are brute-scored into
     // the same ranking heap: the LSM memtable read path on the
     // candidate axis; deletes-then-reingests resolve to the buffer
     "s37_shadowed_current" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivf2TopKShadowed(s, dir)),
+      AnnRead(codebook = Trained(), layout = Current, router = Some(Router()),
+        shadow = Some(Similarity.freshBuffer(s, dir)))(s, dir)),
     // s23: the s17 curve widened to the metrics retrieval pipelines
     // tune on — recall@k, MRR, nDCG@k per probe depth, all exact
     // integer arithmetic so the oracle hash-matches

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -21,32 +22,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // setup: persisted-artifact queries (s11 index, the trained-
-    // codebook families) read pre-built layouts; building here keeps
-    // the query runs themselves pure readers. EVERY call is guarded
-    // per-call, mirroring Bench: the r19 driver round was zeroed
-    // (CORRECTNESS_r19 = {}) because one unguarded setup failure
-    // before the first query killed the whole dump — but a failed
-    // ensure is SURVIVABLE by design (the queries rebuild their
-    // artifacts inline), so it must degrade to a logged warning, not
-    // an empty round. The list matches Bench/Plans (incl. the
-    // semantic index r19's Verify was missing).
-    def setup(name: String)(build: => Unit): Unit =
-      try build catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[verify] WARN $name failed — affected " +
-          s"queries rebuild the artifact inline: $e")
-      }
-    setup("ensureIvfIndex")(graft.ops.Similarity.ensureIvfIndex(spark, sfDir))
-    setup("ensureSemanticIndex")(graft.ops.Similarity.ensureSemanticIndex(spark, sfDir))
-    setup("ensureCodebook")(graft.ops.Similarity.ensureCodebook(spark, sfDir))
-    setup("ensureTrainedIvfIndex")(graft.ops.Similarity.ensureTrainedIvfIndex(spark, sfDir))
-    setup("ensureBpeModel")(graft.ops.TextAnalysis.ensureBpeModel(spark, sfDir))
+    // setup: persisted-artifact queries read pre-built layouts;
+    // building here keeps the query runs themselves pure readers
+    Harness.ensureArtifacts(spark, sfDir, "verify",
+      "rebuild the artifact inline")
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

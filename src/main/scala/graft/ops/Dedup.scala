@@ -1002,7 +1002,7 @@ object Dedup {
     * corpus instead of capping at a fixed cluster count (SemDeDup at
     * production scale runs tens of thousands of clusters for exactly
     * this reason — the paper's own argument, here the same lever as
-    * [[Similarity.ivfTopK]]'s cell granularity). At the sf0.1 seed
+    * [[Similarity.AnnRead]]'s cell granularity). At the sf0.1 seed
     * n=2000 the rule lands on the long-certified 32, so default
     * behavior and oracle are unchanged. Per-group memory is
     * |cell|·dim·8 B (~32 KB at occupancy 64) — executor-bounded by
@@ -1064,8 +1064,9 @@ object Dedup {
     * size sample) — occupancy grows with n and the per-cell
     * occupancy² term is the knob you watch instead; a corpus big
     * enough to strain both wants a coarse routing level above the
-    * codebook (two-level IVF), which [[Similarity.buildIvfIndex]]'s
-    * layout already accommodates. This sized rule is the GATE-SCALE
+    * codebook (two-level IVF, [[Similarity.AnnRead]]'s `router`),
+    * which [[Similarity.buildIvfIndex]]'s layout already
+    * accommodates. This sized rule is the GATE-SCALE
     * convenience that keeps the small-corpus defaults honest, not
     * the 100 TB sizing policy. */
   def sizedNlist(n: Long, occupancy: Int = 64): Int = {

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -78,6 +79,11 @@ private[graft] case class MinMaxVecAgg(
   extends TypedImperativeAggregate[MinMaxState] with UnaryLike[Expression] {
 
   override def prettyName: String = "minmax_vec"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"minmax_vec expects array<float>/array<double>, got ${other.simpleString}")
+  }
   override def nullable: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("mins", ArrayType(DoubleType, containsNull = true)),

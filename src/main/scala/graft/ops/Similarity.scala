@@ -185,36 +185,184 @@ object Similarity {
     topKPerQuery(s, scored, k)
   }
 
-  /** IVF (inverted-file) ANN: a coarse quantizer partitions the corpus
-    * into `nlist` cells; a query probes only its `nprobe` nearest
-    * cells. The 100 TB structure: the centroid table is tiny and
-    * broadcast; cell assignment is one broadcast-join scan over the
-    * corpus (in a real index it is precomputed and the corpus is
-    * bucketed/partitioned BY cell, so a query reads nprobe/nlist of
-    * the data — the IVF selectivity story); scoring touches only
-    * probed cells. Centroids here are `nlist` deterministic corpus
-    * vectors (ids [100, 100+nlist)) standing in for a k-means
-    * codebook — the plan shape is identical, and determinism is what
-    * the oracle needs. Approximate by design: recall < 1 vs
-    * [[bruteForceTopK]] when a true neighbor lives in an unprobed
-    * cell; the DuckDB oracle replicates the same IVF logic. */
-  def ivfTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-      nlist: Int = 32, nprobe: Int = 4): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cent = seededCentroids(emb, nlist)
-    val corpus = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val assign = seededAssign(corpus, cent)
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = probeCells(s, queries, cent, nprobe)
-      .select(col("q_id"), col("cell"))
-    // assignment carries c_emb in-row, so scoring needs no corpus
-    // re-join (and no assignment exchange) — see [[seededAssign]]
-    val scored = assign.join(broadcast(probes), "cell")
-      .filter(col("q_id") =!= col("c_id"))
-      .join(broadcast(queries), "q_id")
-      .withColumn("sim", r4(cosine(col("q_emb"), col("c_emb"))))
-    topKPerQuery(s, scored, k)
+  /** One IVF (inverted-file) top-k read, as a value: every IVF
+    * registry entry is an `AnnRead`, and every field combination runs
+    * through the ONE body in [[AnnRead.apply]] — queries → fine
+    * codebook → probes → candidates → filter, tombstone and shadow
+    * anti-joins → exact r4 scoring → the bounded-heap
+    * [[topKPerQuery]]. A coarse quantizer partitions the corpus into
+    * `nlist` cells and a query probes only its `nprobe` nearest
+    * cells; approximate by design (recall < 1 vs [[bruteForceTopK]]
+    * when a true neighbor lives in an unprobed cell), deterministic
+    * by construction (every stage ranks r4-rounded sims with the
+    * (sim desc, id asc) tie contract), so each DuckDB oracle replays
+    * its entry exactly.
+    *
+    * | field | values | registry entries |
+    * |---|---|---|
+    * | `codebook` | `Seeded` (ids [100, 100+nlist)) · `Trained(iters)` (the persisted Lloyd codebook, [[ensureCodebook]]) | s05 s11 s20 s22 s26–s30 · s07 s31 s33–s37 |
+    * | `layout` | `Inline` · `At(path)` · `Current` | s05 s07 s20 s31 · s11 s22 s26 s27 s33 s34 · s28 s29 s30 s35 s36 s37 |
+    * | `router` | `Router(ncoarse, cprobe)` | s20 s22 s29–s31 s33–s37 |
+    * | `filter` | a predicate on the layout's `label` column | s30 s34 s36 |
+    * | `tombstones` | anti-join [[tombstoneSet]] | s26 |
+    * | `shadow` | a fresh-ingest buffer, [[freshBuffer]]'s schema | s37 |
+    *
+    * Scale and freshness contracts, per field:
+    *
+    *  - `Inline` assigns cells per query with [[seededAssign]] (one
+    *    map-side scan, the vector stays in its row); the codebook is
+    *    nlist-wide regardless of corpus size and broadcasts. Trained
+    *    centroids are doubles; the float corpus scores against them
+    *    inside the codegen'd cosine kernel.
+    *  - `At(path)` reads a [[buildIvfIndex]] / [[ensureTrainedIvfIndex]]
+    *    layout partitioned BY cell: dynamic partition pruning turns
+    *    the broadcast probe join into a partition filter on the
+    *    `cell` directories (IvfIndexSpec asserts the pruning subquery),
+    *    so a query reads nprobe/nlist of the data. Results equal the
+    *    `Inline` read of the same codebook — the layout's cells ARE
+    *    the per-query assignment — so s11/s22/s33 share the
+    *    s05/s20/s31 oracles.
+    *  - `Current` resolves the epoch pointer of the family `codebook`
+    *    names ([[ivfCurrentEpoch]] / [[trainedIvfEpoch]]), so a seeded
+    *    read never follows the trained pointer. Before the family's
+    *    compaction flip it reads the live layout with the tombstone
+    *    anti-join; after it, the compacted layout PLAIN — the
+    *    anti-join leaves the plan, not just the result. Rows are
+    *    identical either side (compaction folds the same
+    *    [[tombstoneSet]]), so a reader racing the flip sees only the
+    *    pre- or post-flip plan of the same answer, and ONE oracle
+    *    certifies whichever epoch the gate finds.
+    *  - `router`: two-level routing (the inverted-multi-index /
+    *    routed-IVF family, Babenko & Lempitsky 2012). An `ncoarse`
+    *    coarse codebook (ids [200, 200+ncoarse)) partitions the fine
+    *    codebook; per query level 1 keeps `cprobe` coarse cells and
+    *    level 2 ranks only the fine centroids routed under them.
+    *    Routing costs ncoarse + cprobe·(nlist/ncoarse) dot products
+    *    instead of nlist (≈1.4k vs 131k at 10^10 vectors) and adds no
+    *    shuffle. Doubly approximate; with cprobe = ncoarse the router
+    *    is exhaustive and the read equals the one-level read exactly
+    *    (OpsSpec pins s20 ≡ s05 and s31 ≡ s07).
+    *  - `filter` is applied to the index scan itself, so Catalyst
+    *    pushes it into the parquet read (PushedFilters), composed with
+    *    the DPP cell pruning: candidates are filtered BEFORE the
+    *    ranking heap, never after it (post-filtering a fixed-k result
+    *    starves label-diverse neighborhoods — the trap s10's oracle
+    *    certifies against). A probed cell with fewer than k
+    *    qualifying candidates legitimately returns fewer rows.
+    *  - `tombstones`: deletes as one broadcast left-anti join on the
+    *    candidate stream (the LSM shape: immutable layout + a small
+    *    delete table until compaction); the partition-pruned scan,
+    *    probes and heap are untouched, and deleted vectors still count
+    *    toward cell assignment, as FAISS `remove_ids` behaves.
+    *  - `shadow`: ids in the buffer leave the index's candidate stream
+    *    (their indexed rows are stale versions — the anti-join uses
+    *    the UNFILTERED buffer ids), and the buffer rows, filtered by
+    *    the same `filter`, are brute-scored into the SAME heap. The
+    *    buffer is strictly newer than the tombstone set, so a
+    *    delete-then-reingest id is served from the buffer; compaction
+    *    folds tombstones, never the buffer, so the shadowed read is
+    *    valid in both epochs.
+    *
+    * Combinations the body cannot run are rejected here, with a
+    * message: a `filter` on `Inline` (per-query candidates carry no
+    * metadata), `tombstones` on `Current` (the epoch decides), and
+    * non-positive sizes. */
+  final case class AnnRead(
+      codebook: AnnRead.Codebook = AnnRead.Seeded,
+      layout: AnnRead.Layout = AnnRead.Inline,
+      router: Option[AnnRead.Router] = None,
+      filter: Option[Column] = None,
+      tombstones: Boolean = false,
+      shadow: Option[DataFrame] = None,
+      nQueries: Int = 10, k: Int = 5, nlist: Int = 32, nprobe: Int = 4)
+    extends ((SparkSession, String) => DataFrame) {
+    import AnnRead._
+    require(k >= 1 && nlist >= 1 && nprobe >= 1,
+      s"AnnRead: k, nlist and nprobe must be >= 1 (k=$k, nlist=$nlist, nprobe=$nprobe)")
+    require(!(layout == Current && tombstones),
+      "AnnRead: a Current layout applies tombstones from its epoch pointer; " +
+        "do not set tombstones with it")
+    require(!(layout == Inline && filter.isDefined),
+      "AnnRead: a filter needs a persisted layout (At or Current) — " +
+        "Inline candidates carry no label column")
+
+    def apply(s: SparkSession, dir: String): DataFrame = {
+      val emb = t(s, dir, "embeddings")
+      val queries = emb.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      val fine = codebook match {
+        case Seeded => seededCentroids(emb, nlist)
+        case Trained(iters) => trainedFineCodebook(s, dir, nlist, iters)
+      }
+      val probes = router match {
+        case Some(r) => routedFineProbes(s, emb, queries, fine, r.ncoarse,
+          r.cprobe, nprobe)
+        case None => probeCells(s, queries, fine, nprobe)
+          .select(col("q_id"), col("cell"))
+      }
+      val (index, tombstoned) = layout match {
+        case Inline => (seededAssign(emb.select(col("vec_id").as("c_id"),
+          col("embedding").as("c_emb")), fine), tombstones)
+        case At(path) => (s.read.parquet(path), tombstones)
+        case Current =>
+          val (path, live) = currentLayout(s, dir)
+          (s.read.parquet(path), live)
+      }
+      val candidates = filter.fold(index)(index.filter)
+        .join(broadcast(probes), "cell")
+      val fresh = if (tombstoned) candidates.join(
+        broadcast(tombstoneSet(s, dir)), Seq("c_id"), "left_anti")
+        else candidates
+      val veiled = shadow.fold(fresh)(b => fresh.join(
+        broadcast(b.select(col("c_id"))), Seq("c_id"), "left_anti"))
+      val scored = veiled
+        .filter(col("q_id") =!= col("c_id"))
+        .join(broadcast(queries), "q_id")
+        .withColumn("sim", r4(cosine(col("q_emb"), col("c_emb"))))
+        .select(col("q_id"), col("c_id"), col("sim"))
+      val all = shadow.fold(scored) { b0 =>
+        val b = filter.fold(b0)(b0.filter)
+        scored.unionByName(
+          queries.crossJoin(broadcast(b))
+            .filter(col("q_id") =!= col("c_id"))
+            .withColumn("sim", r4(cosine(col("q_emb"), col("c_emb"))))
+            .select(col("q_id"), col("c_id"), col("sim")))
+      }
+      topKPerQuery(s, all, k)
+    }
+
+    /** The ONE epoch resolver: (layout path, apply tombstones) for the
+      * family `codebook` names — the compacted layout read plain once
+      * the family's pointer says "compact", else the live layout
+      * (ensured) with the tombstone anti-join. */
+    private def currentLayout(s: SparkSession, dir: String): (String, Boolean) = {
+      val (marker, live, compact) = codebook match {
+        case Seeded => (ivfEpochMarker(s, dir, nlist),
+          () => ensureIvfIndex(s, dir, nlist), ivfCompactPath(s, dir, nlist))
+        case Trained(iters) => (trainedEpochMarker(s, dir, nlist, iters),
+          () => ensureTrainedIvfIndex(s, dir, nlist, iters),
+          trainedCompactPath(s, dir, nlist, iters))
+      }
+      if (epochOf(s, marker) == "compact") (compact, false) else (live(), true)
+    }
+  }
+
+  object AnnRead {
+    sealed trait Codebook
+    case object Seeded extends Codebook
+    final case class Trained(iters: Int = 2) extends Codebook {
+      require(iters >= 1, s"AnnRead.Trained: iters must be >= 1, got $iters")
+    }
+
+    sealed trait Layout
+    case object Inline extends Layout
+    final case class At(path: String) extends Layout
+    case object Current extends Layout
+
+    final case class Router(ncoarse: Int = 8, cprobe: Int = 3) {
+      require(ncoarse >= 1 && cprobe >= 1 && cprobe <= ncoarse,
+        s"AnnRead.Router: need 1 <= cprobe <= ncoarse, got cprobe=$cprobe, ncoarse=$ncoarse")
+    }
   }
 
   /** The seeded coarse codebook: `nlist` deterministic corpus vectors
@@ -278,7 +426,7 @@ object Similarity {
       nprobe, sorted = false)
       .select(col("q_id"), col("c_id").as("cell"), col("rnk").as("probe_rnk"))
 
-  /** Materialize the IVF index [[ivfTopK]] recomputes per query: the
+  /** Materialize the IVF index an `Inline` [[AnnRead]] recomputes per query: the
     * corpus is written PARTITIONED BY cell (one directory per coarse
     * cell), so the index layout IS the inverted file. A query then
     * touches only its `nprobe` cells through partition pruning —
@@ -514,71 +662,6 @@ object Similarity {
     compactPath
   }
 
-  /** The epoch-resolved TRAINED read (s35) — [[ivf2TopKCurrent]]'s
-    * freshness contract on the trained stack: pre-flip, the
-    * candidate stream of the persisted trained layout anti-joins the
-    * broadcast tombstone set; after [[ensureCompactedTrainedIvfIndex]]
-    * flips the family's `_CURRENT`, the read is PLAIN over the
-    * compacted layout (the anti-join leaves the plan). Identical
-    * rows either side by construction (compaction folds the same
-    * deterministic slice), so ONE oracle — s31's trained routing
-    * text with the tombstone filter — certifies whichever epoch the
-    * gate finds. `candFilter` composes the s34 metadata pre-filter
-    * into the same read, giving [[ivf2TopKProduction]]. */
-  def ivf2TopKTrainedCurrent(s: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5, nlist: Int = 32, ncoarse: Int = 8,
-      cprobe: Int = 3, nprobe: Int = 4, iters: Int = 2,
-      candFilter: Option[Column] = None,
-      shadow: Option[DataFrame] = None): DataFrame =
-    epochResolvedScan(s, dir,
-      trainedEpochMarker(s, dir, nlist, iters),
-      ensureTrainedIvfIndex(s, dir, nlist, iters),
-      trainedCompactPath(s, dir, nlist, iters),
-      nQueries, k, nlist, ncoarse, cprobe, nprobe, candFilter,
-      trainedFine = Some(trainedFineCodebook(s, dir, nlist, iters)),
-      shadow = shadow)
-
-  /** The epoch-branched read body — ONE definition for both index
-    * families (the [[ensureCompactedAt]] twin on the read side):
-    * marker says "compact" ⇒ plain scan of the compacted layout;
-    * anything else ⇒ the live layout with the tombstone anti-join.
-    * The freshness CONTRACT (identical rows either side, a reader
-    * racing the flip sees only the pre- or post-flip plan) is a
-    * property of this one body, not of each family's copy of it. */
-  private def epochResolvedScan(s: SparkSession, dir: String,
-      marker: org.apache.hadoop.fs.Path, livePath: => String,
-      compactPath: String, nQueries: Int, k: Int, nlist: Int,
-      ncoarse: Int, cprobe: Int, nprobe: Int,
-      candFilter: Option[Column],
-      trainedFine: Option[DataFrame] = None,
-      shadow: Option[DataFrame] = None): DataFrame =
-    if (epochOf(s, marker) == "compact")
-      ivf2IndexedScan(s, dir, compactPath,
-        nQueries, k, nlist, ncoarse, cprobe, nprobe, tombstones = None,
-        candFilter = candFilter, trainedFine = trainedFine,
-        shadow = shadow)
-    else
-      ivf2IndexedScan(s, dir, livePath,
-        nQueries, k, nlist, ncoarse, cprobe, nprobe,
-        tombstones = Some(tombstoneSet(s, dir)),
-        candFilter = candFilter, trainedFine = trainedFine,
-        shadow = shadow)
-
-  /** THE production read (s36) — every piece of the ANN story in one
-    * query: persisted TRAINED codebook, persisted trained-cell
-    * DPP-pruned layout, two-level router, metadata pre-filter pushed
-    * into the scan (filter-before-heap), and the freshness lifecycle
-    * (tombstones pre-flip, plain compacted read post-flip). This is
-    * the query shape a 100 TB retrieval deployment actually serves;
-    * everything it composes is individually oracled and the
-    * composition itself hash-certifies against s31's trained routing
-    * text + tombstone + label filters, valid in both epochs. */
-  def ivf2TopKProduction(s: SparkSession, dir: String, label: Int = 2,
-      nQueries: Int = 10, k: Int = 5, nlist: Int = 32, ncoarse: Int = 8,
-      cprobe: Int = 3, nprobe: Int = 4, iters: Int = 2): DataFrame =
-    ivf2TopKTrainedCurrent(s, dir, nQueries, k, nlist, ncoarse, cprobe,
-      nprobe, iters, candFilter = Some(col("label") === label))
-
   /** The fresh-ingest BUFFER — vectors (re-)ingested since the last
     * index build, not yet in any indexed layout: the LSM memtable of
     * the ANN story. Deterministic stand-in for a real ingest table:
@@ -595,95 +678,6 @@ object Similarity {
       .select(col("vec_id").as("c_id"), col("label"),
         transform(col("embedding"), v => -v).as("c_emb"))
 
-  /** The SHADOWED epoch-resolved read (s37) — [[ivf2TopKTrainedCurrent]]
-    * with the fresh-ingest buffer composed in: re-ingested ids leave
-    * the index's candidate stream (their indexed rows are stale
-    * versions — one broadcast anti-join), their buffer rows are
-    * brute-scored against every query, and ONE ranking heap serves
-    * the union. Ordering contract: the buffer is strictly newer than
-    * the tombstone set by construction (a production ingest layer
-    * assigns monotonic sequence numbers), so a delete-then-reingest
-    * resolves to the re-ingested row — ids in BOTH deterministic
-    * slices (vec_id ≡ 59 mod 91) are served from the buffer, which
-    * the shared oracle certifies on every gate run. Valid in both
-    * epochs (compaction folds tombstones, never the buffer), so the
-    * ONE s31-derived oracle text covers whichever epoch the gate
-    * finds — the s35 pattern with the buffer union appended. */
-  def ivf2TopKShadowed(s: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5, nlist: Int = 32, ncoarse: Int = 8,
-      cprobe: Int = 3, nprobe: Int = 4, iters: Int = 2,
-      candFilter: Option[Column] = None): DataFrame =
-    ivf2TopKTrainedCurrent(s, dir, nQueries, k, nlist, ncoarse, cprobe,
-      nprobe, iters, candFilter = candFilter,
-      shadow = Some(freshBuffer(s, dir)))
-
-  /** [[ivfTopK]] against a [[buildIvfIndex]] layout: identical
-    * results (same codebook, same probes, same exact re-ranking), but
-    * the candidate scan is the nprobe PARTITIONS the probe table
-    * selects — Spark's dynamic partition pruning turns the broadcast
-    * probe join into a partition filter on the index's `cell`
-    * directories (IvfIndexSpec asserts the pruning subquery in the
-    * executed plan), so the un-probed (nlist - nprobe)/nlist of the
-    * corpus is never read. This is the persisted-index counterpart of
-    * s05's compute-the-index-per-query plan shape. */
-  def ivfTopKIndexed(s: SparkSession, dir: String, indexPath: String,
-      nQueries: Int = 10, k: Int = 5, nprobe: Int = 4,
-      nlist: Int = 32): DataFrame =
-    ivfIndexedScan(s, dir, indexPath, nQueries, k, nprobe, nlist,
-      tombstones = None)
-
-  /** The ONE persisted-index read path behind [[ivfTopKIndexed]] and
-    * [[ivfTopKTombstoned]] — same codebook range, probe selection,
-    * self-filter, and exact re-rank; the tombstoned variant differs
-    * by exactly the optional candidate anti-join, so the s26 ≡ s27
-    * by-construction contract cannot be broken by one twin drifting. */
-  private def ivfIndexedScan(s: SparkSession, dir: String,
-      indexPath: String, nQueries: Int, k: Int, nprobe: Int, nlist: Int,
-      tombstones: Option[DataFrame]): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cent = emb.filter(col("vec_id") >= 100 && col("vec_id") < 100 + nlist)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = topKPerQuery(s,
-      queries.crossJoin(broadcast(cent))
-        .select(col("q_id"), col("cent_id").as("c_id"),
-          r4(cosine(col("q_emb"), col("cent_emb"))).as("sim")),
-      nprobe, sorted = false)
-      .select(col("q_id"), col("c_id").as("cell"))
-    val idx = s.read.parquet(indexPath)
-    val candidates = idx.join(broadcast(probes), "cell")
-    val fresh = tombstones.fold(candidates)(tb =>
-      candidates.join(broadcast(tb), Seq("c_id"), "left_anti"))
-    val scored = fresh
-      .filter(col("q_id") =!= col("c_id"))
-      .join(broadcast(queries), "q_id")
-      .withColumn("sim", r4(cosine(col("q_emb"), col("c_emb"))))
-    topKPerQuery(s, scored, k)
-  }
-
-  /** Tombstoned reads over the persisted IVF index (s26) — the index
-    * FRESHNESS half of the write-once contract: real corpora delete
-    * (takedowns, dedup verdicts, retention windows), but a
-    * partition-bucketed index layout is immutable by design, and
-    * rebuilding 10^10 vectors for every delete batch is not a plan.
-    * The LSM answer: deletes accumulate in a small side TABLE and
-    * every query anti-joins candidates against it until the next
-    * compaction folds them into a fresh [[buildIvfIndex]] layout.
-    * Here the tombstone set is the deterministic vec_id ≡ 3 (mod 7)
-    * slice — scattered across cells, guaranteed to hit live top-k
-    * lists (the spec asserts the result actually differs from s11's
-    * — a tombstone pass that deletes nothing certifies nothing).
-    *
-    * Plan shape over [[ivfTopKIndexed]]: ONE extra broadcast
-    * left-anti join on the candidate stream (tombstone sets are
-    * small relative to the corpus by construction — they reset at
-    * every compaction; an unbroadcastable backlog IS the compaction
-    * trigger). The partition-pruned index scan, broadcast probes,
-    * and bounded-heap ranking are untouched; deleted vectors still
-    * count toward cell assignment (their centroids are codebook
-    * rows, not corpus members) exactly as a FAISS `remove_ids` +
-    * unretrained quantizer behaves. */
   /** The s26/s27 tombstone set — ONE definition (the deterministic
     * vec_id ≡ 3 (mod 7) slice) shared by the tombstoned read path
     * and the compaction, so a query and the compactor can never
@@ -713,7 +707,7 @@ object Similarity {
     * [[ensureIvfIndex]] contract; `/compact` keeps the live and
     * compacted layouts side by side under one generation dir), then
     * FLIPS the epoch pointer: readers resolving through
-    * [[ivfCurrentEpoch]] ([[ivfTopKCurrent]], s28) switch to the
+    * [[ivfCurrentEpoch]] (a `Current` [[AnnRead]], s28) switch to the
     * plain path over the compacted layout, and the tombstone set is
     * thereby RETIRED for this generation — a production delete TABLE
     * would be truncated at the same moment; the deterministic
@@ -793,67 +787,6 @@ object Similarity {
         s"ivf epoch flip failed: rename($tmp -> $marker) returned false")
   }
 
-  /** The EPOCH-RESOLVED read path (s28): one entry point a query
-    * fleet keeps calling across the whole index lifecycle. Before
-    * any compaction it is exactly [[ivfTopKTombstoned]] over `/main`
-    * (the s26 freshness contract); after [[ensureCompactedIvfIndex]]
-    * flips CURRENT it is exactly [[ivfTopKIndexed]] over `/compact`
-    * — the per-query anti-join drops OUT OF THE PLAN, not just out
-    * of the result (IvfIndexSpec pins both plan shapes and row
-    * identity across the switch). At 100 TB this is the operational
-    * point: compaction re-points every reader atomically through one
-    * tiny marker, no query redeploys, and the freshness tax (one
-    * broadcast anti-join per read) is paid only between delete
-    * batches and their compaction. */
-  def ivfTopKCurrent(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5, nprobe: Int = 4, nlist: Int = 32): DataFrame =
-    if (ivfCurrentEpoch(s, dir, nlist) == "compact")
-      ivfIndexedScan(s, dir, ivfCompactPath(s, dir, nlist),
-        nQueries, k, nprobe, nlist, tombstones = None)
-    else
-      ivfIndexedScan(s, dir, ensureIvfIndex(s, dir, nlist),
-        nQueries, k, nprobe, nlist, tombstones = Some(tombstoneSet(s, dir)))
-
-  def ivfTopKTombstoned(s: SparkSession, dir: String, indexPath: String,
-      nQueries: Int = 10, k: Int = 5, nprobe: Int = 4,
-      nlist: Int = 32): DataFrame =
-    ivfIndexedScan(s, dir, indexPath, nQueries, k, nprobe, nlist,
-      tombstones = Some(tombstoneSet(s, dir)))
-
-  /** Two-level IVF routing — a coarse quantizer OVER THE FINE CODEBOOK
-    * (the composite-index structure of FAISS's inverted-multi-index /
-    * routed-IVF family, Babenko & Lempitsky 2012): the query no longer
-    * ranks all `nlist` fine centroids. An `ncoarse`-cell coarse
-    * codebook (seeded corpus vectors, ids [200, 200+ncoarse))
-    * partitions the fine codebook once at build time; per query,
-    * level 1 picks the `cprobe` nearest coarse cells, level 2 ranks
-    * only the fine centroids routed under them and keeps `nprobe`,
-    * and the corpus scan proceeds exactly as [[ivfTopK]] over those
-    * fine cells.
-    *
-    * The 100 TB term this removes is the ROUTING scan: one-level IVF
-    * sizes nlist ≈ √corpus (2^17 cells at 10^10 vectors), so every
-    * query pays 131k centroid dot products before touching data; with
-    * ncoarse ≈ √nlist the per-query routing cost drops to
-    * ncoarse + cprobe·(nlist/ncoarse) ≈ 1.4k — two orders of
-    * magnitude — while the corpus-side plan is UNCHANGED (broadcast
-    * fine probes into the cell-bucketed candidates-only scan, the
-    * [[buildIvfIndex]] pruning story). Both codebooks and the 32-row
-    * fine→coarse route stay broadcast-sized; this op adds zero new
-    * shuffles over [[ivfTopK]].
-    *
-    * Doubly approximate BY CONTRACT: a fine cell routed under an
-    * unprobed coarse cell is invisible even when it holds a true
-    * neighbor, on top of one-level IVF's unprobed-fine-cell loss.
-    * With cprobe = ncoarse the router is exhaustive and the result is
-    * IDENTICAL to [[ivfTopK]] — SimilaritySpec pins that identity.
-    * Cross-engine determinism: every stage (route, coarse probe, fine
-    * probe, final rank) uses r4-rounded sims with the (sim desc,
-    * id asc) tie contract, so the DuckDB oracle replays the full
-    * two-level routing and hash-equality certifies it exactly.
-    * Reference analog: the staged filter-then-consume chains of
-    * streamable/stream.py:230-326, here as query-time index routing.
-    */
   /** The seeded coarse codebook for two-level routing: `ncoarse`
     * deterministic corpus vectors (ids [200, 200+ncoarse)) — a range
     * disjoint from [[seededCentroids]]' fine seeds so the route is a
@@ -904,227 +837,10 @@ object Similarity {
       .select(col("q_id"), col("c_id").as("cell"))
   }
 
-  def ivf2TopK(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5, nlist: Int = 32, ncoarse: Int = 8, cprobe: Int = 3,
-      nprobe: Int = 4): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    routedScan(s, emb, seededCentroids(emb, nlist), nQueries, k,
-      ncoarse, cprobe, nprobe)
-  }
-
-  /** The ONE per-query routed-IVF scan body behind [[ivf2TopK]] (s20,
-    * seeded fine codebook) and [[ivf2TopKTrained]] (s31, persisted
-    * TRAINED fine codebook): route → probe → assign → score → rank,
-    * parameterized only by the fine codebook frame, so the two
-    * variants are identical by construction everywhere except the
-    * centroids themselves. */
-  private def routedScan(s: SparkSession, emb: DataFrame,
-      fine: DataFrame, nQueries: Int, k: Int, ncoarse: Int, cprobe: Int,
-      nprobe: Int): DataFrame = {
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val fineProbes = routedFineProbes(s, emb, queries, fine, ncoarse,
-      cprobe, nprobe)
-    val corpus = emb.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"))
-    val assign = seededAssign(corpus, fine)
-    val scored = assign.join(broadcast(fineProbes), "cell")
-      .filter(col("q_id") =!= col("c_id"))
-      .join(broadcast(queries), "q_id")
-      .withColumn("sim", r4(cosine(col("q_emb"), col("c_emb"))))
-    topKPerQuery(s, scored, k)
-  }
-
-  /** Routing over the TRAINED codebook (s31) — the s07 → s20
-    * composition that completes the ANN ladder's production story:
-    * the persisted Lloyd codebook ([[ensureCodebook]], read at s07's
-    * published r4 precision) becomes the FINE level of the two-level
-    * router, so a production deployment trains once, persists, and
-    * every routed query serves from the artifact — no seeded
-    * stand-in, no per-driver retrain. Everything except the fine
-    * centroids is [[ivf2TopK]] verbatim (the shared [[routedScan]] /
-    * [[routedFineProbes]] bodies): coarse codebook, route
-    * construction, probe selection, assignment, exact re-rank. With
-    * cprobe = ncoarse the router is exhaustive and the result
-    * reduces to [[ivfTopKTrained]] (s07) EXACTLY — SimilaritySpec
-    * pins that identity, and the DuckDB oracle replays the unrolled
-    * Lloyd chain through s20's routing structure every gate run. */
-  def ivf2TopKTrained(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5, nlist: Int = 32, ncoarse: Int = 8, cprobe: Int = 3,
-      nprobe: Int = 4, iters: Int = 2): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    routedScan(s, emb, trainedFineCodebook(s, dir, nlist, iters),
-      nQueries, k, ncoarse, cprobe, nprobe)
-  }
-
-  /** The COMPLETE production ANN stack in one read (s33): persisted
-    * TRAINED codebook ([[ensureCodebook]]) → persisted trained-cell
-    * index layout ([[ensureTrainedIvfIndex]], DPP-pruned) → two-level
-    * router → exact verify. This is s22's composition with every
-    * seeded stand-in replaced by its train-once artifact: a cold
-    * warehouse pays Lloyd training and one index build ONCE; every
-    * query after that is two marker reads, ~1.4k codebook dot
-    * products, and nprobe/nlist of the data. Results are identical to
-    * [[ivf2TopKTrained]] (s31) by construction — same
-    * [[routedFineProbes]], same assignment (the layout's cells ARE
-    * the per-query cells: one [[buildIvfIndexWith]] body against the
-    * same r4-published codebook), same exact re-rank — so s31's
-    * unrolled-Lloyd oracle certifies this path too (the s11/s05
-    * sharing pattern); IvfIndexSpec pins the equality and the pruning
-    * subquery in the executed plan. */
-  def ivf2TopKTrainedIndexed(s: SparkSession, dir: String,
-      nQueries: Int = 10, k: Int = 5, nlist: Int = 32, ncoarse: Int = 8,
-      cprobe: Int = 3, nprobe: Int = 4, iters: Int = 2): DataFrame =
-    ivf2IndexedScan(s, dir, ensureTrainedIvfIndex(s, dir, nlist, iters),
-      nQueries, k, nlist, ncoarse, cprobe, nprobe, tombstones = None,
-      trainedFine = Some(trainedFineCodebook(s, dir, nlist, iters)))
-
-  /** FILTERED search over the TRAINED production stack (s34) — s30's
-    * metadata pre-filter on s33's read: the v2 layout body writes the
-    * `label` column into the trained-cell layout too, so the
-    * predicate pushes into the DPP-pruned trained index scan and
-    * candidates are filtered between the scan and the exact verify —
-    * before the ranking heap, never after it (the s10 starvation
-    * contract). With this the filter capability is symmetric across
-    * both index families: a retrieval user filters on the seeded
-    * lifecycle path (s30) and on the trained path (s34) through the
-    * SAME [[ivf2IndexedScan]] seam. */
-  def ivf2TopKTrainedFiltered(s: SparkSession, dir: String,
-      label: Int = 2, nQueries: Int = 10, k: Int = 5, nlist: Int = 32,
-      ncoarse: Int = 8, cprobe: Int = 3, nprobe: Int = 4,
-      iters: Int = 2): DataFrame =
-    ivf2IndexedScan(s, dir, ensureTrainedIvfIndex(s, dir, nlist, iters),
-      nQueries, k, nlist, ncoarse, cprobe, nprobe, tombstones = None,
-      candFilter = Some(col("label") === label),
-      trainedFine = Some(trainedFineCodebook(s, dir, nlist, iters)))
-
-  /** [[ivf2TopK]] against a [[buildIvfIndex]] layout — the COMPOSED
-    * production query path at 100 TB: the router cuts the per-query
-    * centroid scan (s20's claim) AND dynamic partition pruning cuts
-    * the corpus read to the probed cells' directories (s11's claim),
-    * so a query's total cost is ~1.4k codebook dot products plus
-    * nprobe/nlist of the data — neither term touches the corpus size
-    * except through cell occupancy. Results are identical to
-    * [[ivf2TopK]] by construction (same [[routedFineProbes]], same
-    * exact re-ranking), so the s20 oracle text certifies this path
-    * too (the s11/s05 sharing pattern); IvfIndexSpec pins both the
-    * equality and the pruning subquery in the executed plan.
-    * Reference analog: the staged filter-then-consume chains of
-    * streamable/stream.py:230-326, composed with the persisted-
-    * layout read. */
-  def ivf2TopKIndexed(s: SparkSession, dir: String, indexPath: String,
-      nQueries: Int = 10, k: Int = 5, nlist: Int = 32, ncoarse: Int = 8,
-      cprobe: Int = 3, nprobe: Int = 4): DataFrame =
-    ivf2IndexedScan(s, dir, indexPath, nQueries, k, nlist, ncoarse,
-      cprobe, nprobe, tombstones = None)
-
-  /** The ONE routed persisted-index read path behind
-    * [[ivf2TopKIndexed]] and [[ivf2TopKCurrent]] — the
-    * [[ivfIndexedScan]] twin contract: the tombstoned variant
-    * differs by exactly the optional candidate anti-join, so the
-    * epoch-resolved path cannot drift from the raw-path s20/s22
-    * identity. */
-  private def ivf2IndexedScan(s: SparkSession, dir: String,
-      indexPath: String, nQueries: Int, k: Int, nlist: Int, ncoarse: Int,
-      cprobe: Int, nprobe: Int, tombstones: Option[DataFrame],
-      candFilter: Option[Column] = None,
-      trainedFine: Option[DataFrame] = None,
-      shadow: Option[DataFrame] = None): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val fineProbes = routedFineProbes(s, emb, queries,
-      trainedFine.getOrElse(seededCentroids(emb, nlist)), ncoarse,
-      cprobe, nprobe)
-    // the metadata PRE-filter (s30) applies to the index scan itself —
-    // Catalyst pushes it into the parquet read (PushedFilters), where
-    // it composes with the DPP cell pruning: candidates are filtered
-    // BEFORE the ranking heap ever sees them, so top-k is never
-    // starved the way post-filtering a fixed-k result is (the trap
-    // s10's oracle certifies against, here on the production path)
-    val idx0 = s.read.parquet(indexPath)
-    val idx = candFilter.fold(idx0)(idx0.filter)
-    val candidates = idx.join(broadcast(fineProbes), "cell")
-    val fresh = tombstones.fold(candidates)(tb =>
-      candidates.join(broadcast(tb), Seq("c_id"), "left_anti"))
-    // the fresh-ingest buffer SHADOWS the index (s37): ids re-ingested
-    // since the last index build are excluded from the index's
-    // candidate stream (their indexed rows are stale versions) and
-    // their buffer rows are brute-scored into the SAME ranking heap —
-    // the LSM memtable read path, on the candidate axis. The
-    // anti-join uses the UNFILTERED buffer ids (a stale indexed row
-    // is stale even when its update fails the metadata filter), while
-    // the scored buffer branch applies the same candFilter as the
-    // index scan — so the shadow seam composes with the
-    // filtered/production reads without serving predicate-violating
-    // buffer rows (the buffer carries the candidate's metadata for
-    // exactly this reason)
-    val veiled = shadow.fold(fresh)(b => fresh.join(
-      broadcast(b.select(col("c_id"))), Seq("c_id"), "left_anti"))
-    val scored = veiled
-      .filter(col("q_id") =!= col("c_id"))
-      .join(broadcast(queries), "q_id")
-      .withColumn("sim", r4(cosine(col("q_emb"), col("c_emb"))))
-      .select(col("q_id"), col("c_id"), col("sim"))
-    val all = shadow.fold(scored) { b0 =>
-      val b = candFilter.fold(b0)(b0.filter)
-      scored.unionByName(
-        queries.crossJoin(broadcast(b))
-          .filter(col("q_id") =!= col("c_id"))
-          .withColumn("sim", r4(cosine(col("q_emb"), col("c_emb"))))
-          .select(col("q_id"), col("c_id"), col("sim")))
-    }
-    topKPerQuery(s, all, k)
-  }
-
-  /** The epoch-resolved ROUTED read (s29) — [[ivfTopKCurrent]]'s
-    * freshness lifecycle given to the query shape the 100 TB story
-    * actually recommends (s22: two-level router + persisted
-    * partition-pruned layout). Before any compaction it reads
-    * `/main` with the per-query tombstone anti-join; after
-    * [[ensureCompactedIvfIndex]] flips CURRENT it reads `/compact`
-    * PLAIN (the anti-join leaves the plan, not just the result) —
-    * so the recommended production path sees deletes immediately
-    * and survives a compaction flip with no query redeploys, the
-    * s28 contract verbatim. Both sides return identical rows by
-    * construction (compaction folds the SAME [[tombstoneSet]]), so
-    * ONE oracle — s20's routing text with the tombstone slice
-    * filtered out — certifies the path in whichever epoch the gate
-    * finds it. */
-  def ivf2TopKCurrent(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5, nlist: Int = 32, ncoarse: Int = 8, cprobe: Int = 3,
-      nprobe: Int = 4, candFilter: Option[Column] = None): DataFrame =
-    epochResolvedScan(s, dir, ivfEpochMarker(s, dir, nlist),
-      ensureIvfIndex(s, dir, nlist), ivfCompactPath(s, dir, nlist),
-      nQueries, k, nlist, ncoarse, cprobe, nprobe, candFilter)
-
-  /** FILTERED search on the production path (s30) — the query a
-    * 100 TB retrieval user actually runs: "top-k among `label = L`,
-    * over the FRESH index". s10's metadata pre-filter meets the
-    * epoch-resolved routed read ([[ivf2TopKCurrent]]): the predicate
-    * lands on the v2 index layout's in-row `label` column, so it is
-    * PUSHED into the (DPP-pruned) parquet index scan — candidates
-    * are filtered between the scan and the exact verify, never after
-    * the ranking heap (post-filtering a fixed-k result returns < k
-    * rows whenever the neighborhood is label-diverse — the
-    * starvation trap s10's oracle certifies against, honored here on
-    * the lifecycle path). Tombstones, the epoch flip, and the DPP
-    * story are exactly s29's; a probed cell whose qualifying
-    * candidates number < k legitimately returns fewer rows — the
-    * IVF-filtered contract every ANN library documents. Reference
-    * analog: the predicate-filter chains of
-    * streamable/stream.py:230-253 composed with the persisted-index
-    * read. */
-  def ivf2TopKCurrentFiltered(s: SparkSession, dir: String,
-      label: Int = 2, nQueries: Int = 10, k: Int = 5, nlist: Int = 32,
-      ncoarse: Int = 8, cprobe: Int = 3, nprobe: Int = 4): DataFrame =
-    ivf2TopKCurrent(s, dir, nQueries, k, nlist, ncoarse, cprobe, nprobe,
-      candFilter = Some(col("label") === label))
-
   /** Router recall curve (s21) — the s17 measured-advisory pattern on
     * the COARSE-PROBE axis: how much of the one-level IVF result does
-    * [[ivf2TopK]]'s router keep at each `cprobe`, on the same
-    * queries. The baseline is deliberately [[ivfTopK]] (not brute
+    * the s20 router keep at each `cprobe`, on the same
+    * queries. The baseline is deliberately the one-level [[AnnRead]] (not brute
     * force): the curve isolates the ROUTER's loss from IVF's own
     * unprobed-fine-cell loss — and the cprobe = ncoarse row must read
     * exactly 1000, the exhaustive-router identity of the s20
@@ -1187,7 +903,8 @@ object Similarity {
       .select(col("q_id"), col("cell"), col("c_id"),
         r4(cosine(col("q_emb"), col("c_emb"))).as("sim"))
       .localCheckpoint(eager = false)
-    val baseline = ivfTopK(s, dir, nQueries, k, nlist, nprobe)
+    val baseline = AnnRead(nQueries = nQueries, k = k, nlist = nlist,
+      nprobe = nprobe)(s, dir)
       .select("q_id", "c_id").localCheckpoint(eager = false)
     val perCp = cprobes.map { cp =>
       topKPerQuery(s,
@@ -1207,14 +924,14 @@ object Similarity {
   }
 
   /** Trained IVF codebook: `iters` rounds of Lloyd's k-means over the
-    * corpus, upgrading [[ivfTopK]]'s seeded stand-in codebook to the
+    * corpus, upgrading the seeded [[AnnRead]] stand-in codebook to the
     * real thing — the missing piece between "IVF plan shape" and "IVF
     * index you would actually ship". Each round is the classic
     * two-step as declarative Spark:
     *
     *  - ASSIGN: argmax cosine(v, c_j) via one broadcast of the (tiny)
     *    centroid table against the corpus — a map-side scan, the same
-    *    shape as [[ivfTopK]]'s cell assignment (max of an orderable
+    *    shape as [[seededAssign]]'s cell assignment (max of an orderable
     *    struct, ties to the lowest cell id; no window).
     *  - UPDATE: per-(cell, dim) mean of member components over the
     *    melted corpus — one shuffle on (cell, dim), fully parallel.
@@ -1241,7 +958,7 @@ object Similarity {
       iters: Int = 2): DataFrame = {
     val (cent, assign) = trainedCentroids(s, dir, nlist, iters)
     // n_members needs one extra assignment pass — the PUBLISHED
-    // codebook carries it, but [[ivfTopKTrained]] (which immediately
+    // codebook carries it, but the trained [[AnnRead]] (which immediately
     // re-assigns the corpus anyway) skips straight to the centroids:
     // at 100 TB this pass is a full corpus×nlist cosine scan, paid
     // only where the counts are actually consumed
@@ -1385,7 +1102,7 @@ object Similarity {
   }
 
   /** The trained-codebook SERVE path shared by [[kmeansCodebook]]
-    * (publishes centroids + member counts) and [[ivfTopKTrained]]
+    * (publishes centroids + member counts) and the trained [[AnnRead]]
     * (needs only the centroids — skipping the counts saves a whole
     * corpus assignment pass). Returns (melted centroid frame (cell,
     * dim, cval — raw doubles, NOT r4-rounded), a LAZY
@@ -1433,8 +1150,8 @@ object Similarity {
 
   /** The trained codebook at its PUBLISHED r4 precision as
     * (cent_id, cent_emb) — the exact frame every trained-IVF query
-    * ranks against, ONE definition shared by [[ivfTopKTrained]] (s07)
-    * and [[ivf2TopKTrained]] (s31) so the identity they certify
+    * ranks against, ONE definition shared by every trained
+    * [[AnnRead]] (s07, s31, s33–s37) so the identity they certify
     * against each other (cprobe = ncoarse ⇒ s31 ≡ s07) cannot drift.
     * cvals are r4-rounded exactly like the published codebook (the
     * oracle quantizes identically), but via [[trainedCentroids]]
@@ -1866,43 +1583,6 @@ object Similarity {
         (col("rnk") <= col("n_members") / lit(4L)).cast("int"))
       .select(col("cell"), col("vec_id"), col("rnk"), col("csim"), col("pruned"))
       .orderBy("cell", "rnk")
-  }
-
-  /** The closed loop: IVF top-k over the TRAINED [[kmeansCodebook]]
-    * instead of [[ivfTopK]]'s seed stand-ins — train → index → query,
-    * every stage certified (the s07 oracle composes s06's unrolled
-    * Lloyd CTEs with s05's probe/score/rank structure). Plan shape is
-    * identical to [[ivfTopK]]: codebook broadcasts (it is nlist-wide
-    * regardless of corpus size), cell assignment is one scan, probes
-    * and final ranking use the bounded-heap [[topKPerQuery]]. The
-    * float corpus scores against the double trained centroids inside
-    * the codegen'd cosine kernel (mixed-type support). */
-  def ivfTopKTrained(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5, nlist: Int = 32, nprobe: Int = 4, iters: Int = 2): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cent = trainedFineCodebook(s, dir, nlist, iters)
-    val corpus = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val assign = corpus.crossJoin(broadcast(cent))
-      .withColumn("sim_c", r4(cosine(col("c_emb"), col("cent_emb"))))
-      .groupBy("c_id")
-      .agg(max(struct(col("sim_c").as("s"), (-col("cent_id")).as("nc"))).as("m"))
-      .select(col("c_id"), (-col("m.nc")).as("cell"))
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = topKPerQuery(s,
-      queries.crossJoin(broadcast(cent))
-        .select(col("q_id"), col("cent_id").as("c_id"),
-          r4(cosine(col("q_emb"), col("cent_emb"))).as("sim")),
-      nprobe, sorted = false)
-      .select(col("q_id"), col("c_id").as("cell"))
-    val candidates = assign.join(broadcast(probes), "cell")
-      .filter(col("q_id") =!= col("c_id"))
-      .select("q_id", "c_id")
-    val scored = candidates
-      .join(broadcast(queries), "q_id")
-      .join(corpus, "c_id")
-      .withColumn("sim", r4(cosine(col("q_emb"), col("c_emb"))))
-    topKPerQuery(s, scored, k)
   }
 
   /** Scalar-quantized (int8) exact-rerank-free top-k: the ANN

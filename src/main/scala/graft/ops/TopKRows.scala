@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -86,6 +87,15 @@ private[graft] case class TopKRowsAgg(
   require(k >= 1)
 
   override def prettyName: String = "topk_rows"
+  // a wrong-typed column fails analysis here instead of a task's
+  // unboxing cast in `update`
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (LongType, DoubleType) => TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"topk_rows expects (bigint id, double score), got " +
+          s"${l.simpleString}, ${r.simpleString}")
+    }
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("id", LongType, nullable = false),

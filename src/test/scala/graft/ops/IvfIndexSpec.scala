@@ -1,6 +1,9 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.Similarity.AnnRead
+import graft.ops.Similarity.AnnRead.{At, Current, Router, Trained}
+import org.apache.spark.sql.functions.col
 
 /** Persisted IVF index: layout-as-inverted-file. The value claim is
   * twofold — (a) results are byte-identical to the per-query plan
@@ -13,8 +16,8 @@ class IvfIndexSpec extends SparkSpec {
   test("indexed IVF equals the per-query IVF result exactly") {
     val idxPath = "/tmp/graft_ivf_index_spec"
     Similarity.buildIvfIndex(spark, sf0001, idxPath)
-    val direct = Similarity.ivfTopK(spark, sf0001).collect().map(_.toSeq).toList
-    val viaIdx = Similarity.ivfTopKIndexed(spark, sf0001, idxPath)
+    val direct = AnnRead()(spark, sf0001).collect().map(_.toSeq).toList
+    val viaIdx = AnnRead(layout = At(idxPath))(spark, sf0001)
       .collect().map(_.toSeq).toList
     assert(viaIdx == direct)
   }
@@ -29,16 +32,16 @@ class IvfIndexSpec extends SparkSpec {
     assert(Similarity.ensureIvfIndex(spark, sf0001) == path)
     assert(fs.getFileStatus(marker).getModificationTime == mtime)
     // the s11 registration shape: pure-reader query over the layout
-    val viaIdx = Similarity.ivfTopKIndexed(spark, sf0001, path)
+    val viaIdx = AnnRead(layout = At(path))(spark, sf0001)
       .collect().map(_.toSeq).toList
-    val direct = Similarity.ivfTopK(spark, sf0001).collect().map(_.toSeq).toList
+    val direct = AnnRead()(spark, sf0001).collect().map(_.toSeq).toList
     assert(viaIdx == direct)
   }
 
   test("probe join prunes the index scan to probed cell partitions") {
     val idxPath = "/tmp/graft_ivf_index_spec"
     Similarity.buildIvfIndex(spark, sf0001, idxPath)
-    val df = Similarity.ivfTopKIndexed(spark, sf0001, idxPath)
+    val df = AnnRead(layout = At(idxPath))(spark, sf0001)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.toLowerCase.contains("dynamicpruning"),
@@ -48,8 +51,9 @@ class IvfIndexSpec extends SparkSpec {
   test("routed indexed IVF (s22) equals per-query s20 exactly and still prunes") {
     val idxPath = "/tmp/graft_ivf_index_spec"
     Similarity.buildIvfIndex(spark, sf0001, idxPath)
-    val direct = Similarity.ivf2TopK(spark, sf0001).collect().map(_.toSeq).toList
-    val df = Similarity.ivf2TopKIndexed(spark, sf0001, idxPath)
+    val direct = AnnRead(router = Some(Router()))(spark, sf0001)
+      .collect().map(_.toSeq).toList
+    val df = AnnRead(layout = At(idxPath), router = Some(Router()))(spark, sf0001)
     val viaIdx = df.collect().map(_.toSeq).toList
     assert(viaIdx == direct,
       "persisted-path routed IVF must equal the per-query routed plan row-for-row")
@@ -64,9 +68,9 @@ class IvfIndexSpec extends SparkSpec {
     "delete genuinely bit, and the index scan still prunes") {
     val idxPath = "/tmp/graft_ivf_index_spec"
     Similarity.buildIvfIndex(spark, sf0001, idxPath)
-    val live = Similarity.ivfTopKIndexed(spark, sf0001, idxPath).collect()
+    val live = AnnRead(layout = At(idxPath))(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val df = Similarity.ivfTopKTombstoned(spark, sf0001, idxPath)
+    val df = AnnRead(layout = At(idxPath), tombstones = true)(spark, sf0001)
     val tomb = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // no deleted id survives anywhere in any top-k
     assert(tomb.forall { case (_, _, cId) => cId % 7 != 3 },
@@ -103,9 +107,9 @@ class IvfIndexSpec extends SparkSpec {
     Similarity.compactIvfIndex(spark, sf0001, idxPath, outPath)
     // identical results through the PLAIN s11 read path — no per-query
     // tombstone join anymore
-    val viaTomb = Similarity.ivfTopKTombstoned(spark, sf0001, idxPath)
+    val viaTomb = AnnRead(layout = At(idxPath), tombstones = true)(spark, sf0001)
       .collect().map(_.toSeq).toList
-    val df = Similarity.ivfTopKIndexed(spark, sf0001, outPath)
+    val df = AnnRead(layout = At(outPath))(spark, sf0001)
     assert(df.collect().map(_.toSeq).toList == viaTomb,
       "compacted reads must equal tombstoned reads row-for-row")
     // the layout physically dropped every tombstoned row
@@ -147,21 +151,21 @@ class IvfIndexSpec extends SparkSpec {
     fs.delete(new Path(genDir, "compact_v2_nl32"), true)
     assert(Similarity.ivfCurrentEpoch(spark, sf0001) == "main",
       "an absent pointer must resolve to the main epoch")
-    val pre = Similarity.ivfTopKCurrent(spark, sf0001)
+    val pre = AnnRead(layout = Current)(spark, sf0001)
     val preRows = pre.collect().map(_.toSeq).toList
     val pPre = pre.queryExecution.executedPlan.toString
     assert(pPre.contains("LeftAnti"),
       s"pre-flip reads must apply the tombstone anti-join:\n$pPre")
     assert(pPre.toLowerCase.contains("dynamicpruning"),
       s"no DPP on the pre-flip scan:\n$pPre")
-    assert(preRows == Similarity.ivfTopKTombstoned(spark, sf0001, main)
+    assert(preRows == AnnRead(layout = At(main), tombstones = true)(spark, sf0001)
       .collect().map(_.toSeq).toList,
       "pre-flip resolver must equal the explicit tombstoned read")
     // compact → the ensure flips the pointer
     Similarity.ensureCompactedIvfIndex(spark, sf0001)
     assert(Similarity.ivfCurrentEpoch(spark, sf0001) == "compact",
       "ensureCompactedIvfIndex must flip CURRENT")
-    val post = Similarity.ivfTopKCurrent(spark, sf0001)
+    val post = AnnRead(layout = Current)(spark, sf0001)
     val postRows = post.collect().map(_.toSeq).toList
     val pPost = post.queryExecution.executedPlan.toString
     assert(!pPost.contains("LeftAnti"),
@@ -188,7 +192,7 @@ class IvfIndexSpec extends SparkSpec {
     val fs = genDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(genDir, "CURRENT_v2_nl32"), false)
     fs.delete(new Path(genDir, "compact_v2_nl32"), true)
-    val pre = Similarity.ivf2TopKCurrent(spark, sf0001)
+    val pre = AnnRead(layout = Current, router = Some(Router()))(spark, sf0001)
     val preRows = pre.collect().map(_.toSeq).toList
     val pPre = pre.queryExecution.executedPlan.toString
     assert(pPre.contains("LeftAnti"),
@@ -197,12 +201,12 @@ class IvfIndexSpec extends SparkSpec {
       s"no DPP on the pre-flip routed scan:\n$pPre")
     // a delete pass that deletes nothing certifies nothing: the
     // lifecycle result must genuinely differ from the raw s22 read
-    val raw = Similarity.ivf2TopKIndexed(spark, sf0001, main)
+    val raw = AnnRead(layout = At(main), router = Some(Router()))(spark, sf0001)
       .collect().map(_.toSeq).toList
     assert(preRows != raw,
       "tombstones must hit live routed top-k lists on this corpus")
     Similarity.ensureCompactedIvfIndex(spark, sf0001)
-    val post = Similarity.ivf2TopKCurrent(spark, sf0001)
+    val post = AnnRead(layout = Current, router = Some(Router()))(spark, sf0001)
     val postRows = post.collect().map(_.toSeq).toList
     val pPost = post.queryExecution.executedPlan.toString
     assert(!pPost.contains("LeftAnti"),
@@ -226,7 +230,8 @@ class IvfIndexSpec extends SparkSpec {
     val fs = genDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(genDir, "CURRENT_v2_nl32"), false)
     fs.delete(new Path(genDir, "compact_v2_nl32"), true)
-    val pre = Similarity.ivf2TopKCurrentFiltered(spark, sf0001)
+    val pre = AnnRead(layout = Current, router = Some(Router()),
+      filter = Some(col("label") === 2))(spark, sf0001)
     val preRows = pre.collect().map(_.toSeq).toList
     assert(preRows.nonEmpty, "the filtered read must return candidates")
     val pPre = pre.queryExecution.executedPlan.toString
@@ -249,8 +254,9 @@ class IvfIndexSpec extends SparkSpec {
     // filtered read must surface label-2 candidates the unfiltered
     // top-k never ranked (post-filtering s29's k rows could only ever
     // SHRINK per-query lists — never introduce a new candidate)
-    val unfiltered = Similarity.ivf2TopKCurrent(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val unfiltered =
+      AnnRead(layout = Current, router = Some(Router()))(spark, sf0001)
+        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val introduced = preRows.map(r =>
       (r(0).asInstanceOf[Long], r(2).asInstanceOf[Long]))
       .filterNot(unfiltered.contains)
@@ -259,7 +265,8 @@ class IvfIndexSpec extends SparkSpec {
         "a result explainable by post-filtering certifies nothing")
     // THE FLIP — the filtered production read survives it unchanged
     Similarity.ensureCompactedIvfIndex(spark, sf0001)
-    val post = Similarity.ivf2TopKCurrentFiltered(spark, sf0001)
+    val post = AnnRead(layout = Current, router = Some(Router()),
+      filter = Some(col("label") === 2))(spark, sf0001)
     val postRows = post.collect().map(_.toSeq).toList
     val pPost = post.queryExecution.executedPlan.toString
     assert(!pPost.contains("LeftAnti"),
@@ -275,9 +282,12 @@ class IvfIndexSpec extends SparkSpec {
   test("trained-indexed routed IVF (s33): equals per-query s31 exactly, " +
     "the layout's cells are the per-query assignment, and the trained " +
     "index scan still DPP-prunes") {
-    val direct = Similarity.ivf2TopKTrained(spark, sf0001)
-      .collect().map(_.toSeq).toList
-    val df = Similarity.ivf2TopKTrainedIndexed(spark, sf0001)
+    val direct =
+      AnnRead(codebook = Trained(), router = Some(Router()))(spark, sf0001)
+        .collect().map(_.toSeq).toList
+    val df = AnnRead(codebook = Trained(),
+      layout = At(Similarity.ensureTrainedIvfIndex(spark, sf0001)),
+      router = Some(Router()))(spark, sf0001)
     val viaIdx = df.collect().map(_.toSeq).toList
     assert(viaIdx == direct,
       "persisted trained-cell layout must equal the per-query trained " +
@@ -306,7 +316,9 @@ class IvfIndexSpec extends SparkSpec {
     "trained layout's scan, candidates filtered BEFORE the heap, every " +
     "survivor matches, DPP intact") {
     import org.apache.spark.sql.functions.col
-    val df = Similarity.ivf2TopKTrainedFiltered(spark, sf0001)
+    val df = AnnRead(codebook = Trained(),
+      layout = At(Similarity.ensureTrainedIvfIndex(spark, sf0001)),
+      router = Some(Router()), filter = Some(col("label") === 2))(spark, sf0001)
     val rows = df.collect().map(_.toSeq).toList
     assert(rows.nonEmpty, "the filtered trained read must return candidates")
     val p = df.queryExecution.executedPlan.toString
@@ -323,7 +335,9 @@ class IvfIndexSpec extends SparkSpec {
     }
     // filter-BEFORE-heap: the filtered read must surface label-2
     // candidates the unfiltered trained top-k never ranked
-    val unfiltered = Similarity.ivf2TopKTrainedIndexed(spark, sf0001)
+    val unfiltered = AnnRead(codebook = Trained(),
+      layout = At(Similarity.ensureTrainedIvfIndex(spark, sf0001)),
+      router = Some(Router()))(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val introduced = rows.map(r =>
       (r(0).asInstanceOf[Long], r(2).asInstanceOf[Long]))
@@ -347,7 +361,8 @@ class IvfIndexSpec extends SparkSpec {
     fs.delete(new Path(genDir, s"${leaf}_compact"), true)
     assert(Similarity.trainedIvfEpoch(spark, sf0001) == "main",
       "an absent trained pointer must resolve to the main epoch")
-    val pre = Similarity.ivf2TopKTrainedCurrent(spark, sf0001)
+    val pre = AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()))(spark, sf0001)
     val preRows = pre.collect().map(_.toSeq).toList
     val pPre = pre.queryExecution.executedPlan.toString
     assert(pPre.contains("LeftAnti"),
@@ -355,16 +370,20 @@ class IvfIndexSpec extends SparkSpec {
     assert(pPre.toLowerCase.contains("dynamicpruning"),
       s"no DPP on the pre-flip trained scan:\n$pPre")
     // tombstones must genuinely bite vs the raw s33 read
-    val raw = Similarity.ivf2TopKTrainedIndexed(spark, sf0001)
+    val raw = AnnRead(codebook = Trained(),
+      layout = At(Similarity.ensureTrainedIvfIndex(spark, sf0001)),
+      router = Some(Router()))(spark, sf0001)
       .collect().map(_.toSeq).toList
     assert(preRows != raw,
       "tombstones must hit live trained top-k lists on this corpus")
-    val prodPre = Similarity.ivf2TopKProduction(spark, sf0001)
+    val prodPre = AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()), filter = Some(col("label") === 2))(spark, sf0001)
       .collect().map(_.toSeq).toList
     // THE FLIP — the trained family's own pointer
     Similarity.ensureCompactedTrainedIvfIndex(spark, sf0001)
     assert(Similarity.trainedIvfEpoch(spark, sf0001) == "compact")
-    val post = Similarity.ivf2TopKTrainedCurrent(spark, sf0001)
+    val post = AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()))(spark, sf0001)
     val postRows = post.collect().map(_.toSeq).toList
     val pPost = post.queryExecution.executedPlan.toString
     assert(!pPost.contains("LeftAnti"),
@@ -375,7 +394,8 @@ class IvfIndexSpec extends SparkSpec {
       "the trained flip must be invisible in results")
     // the full production read: parity across the flip, filter pushed,
     // every survivor matches predicate AND tombstone
-    val prodPost = Similarity.ivf2TopKProduction(spark, sf0001)
+    val prodPost = AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()), filter = Some(col("label") === 2))(spark, sf0001)
     val prodPostRows = prodPost.collect().map(_.toSeq).toList
     assert(prodPostRows == prodPre,
       "the production read must hold parity across the trained flip")
@@ -417,7 +437,9 @@ class IvfIndexSpec extends SparkSpec {
     val fs = genDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(genDir, s"${leaf}_CURRENT"), false)
     fs.delete(new Path(genDir, s"${leaf}_compact"), true)
-    val pre = Similarity.ivf2TopKShadowed(spark, sf0001)
+    val pre = AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()),
+      shadow = Some(Similarity.freshBuffer(spark, sf0001)))(spark, sf0001)
     val preRows = pre.collect().map(_.toSeq).toList
     // AQE's toString prints the Final AND Initial plans — count
     // anti-joins in the final section only
@@ -434,7 +456,8 @@ class IvfIndexSpec extends SparkSpec {
     // epoch read, buffer ids are SERVED, and an id in both slices
     // (deleted AND re-ingested, vec_id ≡ 59 mod 91) resolves to the
     // buffer — the ordering contract visible in results
-    val unshadowed = Similarity.ivf2TopKTrainedCurrent(spark, sf0001)
+    val unshadowed = AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()))(spark, sf0001)
       .collect().map(_.toSeq).toList
     assert(preRows != unshadowed,
       "the buffer must change top-k on this corpus")
@@ -445,7 +468,9 @@ class IvfIndexSpec extends SparkSpec {
       "a delete-then-reingest id must be served from the buffer here")
     // THE FLIP — tombstones fold into the layout; the buffer does not
     Similarity.ensureCompactedTrainedIvfIndex(spark, sf0001)
-    val post = Similarity.ivf2TopKShadowed(spark, sf0001)
+    val post = AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()),
+      shadow = Some(Similarity.freshBuffer(spark, sf0001)))(spark, sf0001)
     val postRows = post.collect().map(_.toSeq).toList
     val pPost = finalPlan(post)
     assert("LeftAnti".r.findAllIn(pPost).size == 1,
@@ -460,8 +485,9 @@ class IvfIndexSpec extends SparkSpec {
     // out while their stale indexed versions stay shadowed; buffer
     // rows passing it may be served even when tombstoned (buffer wins)
     import org.apache.spark.sql.functions.col
-    val composed = Similarity.ivf2TopKShadowed(spark, sf0001,
-      candFilter = Some(col("label") === 2))
+    val composed = AnnRead(codebook = Trained(), layout = Current,
+      router = Some(Router()), filter = Some(col("label") === 2),
+      shadow = Some(Similarity.freshBuffer(spark, sf0001)))(spark, sf0001)
       .collect().map(_.toSeq).toList
     val labelOf = Relational.t(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("label")).collect()
@@ -500,6 +526,60 @@ class IvfIndexSpec extends SparkSpec {
     }
     // the live v2 tree is untouched and still serves
     assert(fs.exists(new Path(s"$main/_SUCCESS")))
-    assert(Similarity.ivfTopKIndexed(spark, sf0001, main).collect().nonEmpty)
+    assert(AnnRead(layout = At(main))(spark, sf0001).collect().nonEmpty)
+  }
+
+  test("AnnRead rejects non-positive k, nlist and nprobe") {
+    Seq(() => AnnRead(k = 0), () => AnnRead(nlist = 0),
+        () => AnnRead(nprobe = 0)).foreach { mk =>
+      val e = intercept[IllegalArgumentException](mk())
+      assert(e.getMessage.contains("k, nlist and nprobe must be >= 1"),
+        e.getMessage)
+    }
+  }
+
+  test("AnnRead rejects tombstones on a Current layout") {
+    val e = intercept[IllegalArgumentException](
+      AnnRead(layout = Current, tombstones = true))
+    assert(e.getMessage.contains("epoch pointer"), e.getMessage)
+  }
+
+  test("AnnRead rejects a filter on the Inline layout") {
+    val e = intercept[IllegalArgumentException](
+      AnnRead(filter = Some(col("label") === 2)))
+    assert(e.getMessage.contains("filter needs a persisted layout"),
+      e.getMessage)
+  }
+
+  test("AnnRead.Router rejects cprobe outside [1, ncoarse]") {
+    Seq(() => Router(cprobe = 0), () => Router(ncoarse = 4, cprobe = 5),
+        () => Router(ncoarse = 0, cprobe = 0)).foreach { mk =>
+      val e = intercept[IllegalArgumentException](mk())
+      assert(e.getMessage.contains("1 <= cprobe <= ncoarse"), e.getMessage)
+    }
+  }
+
+  test("AnnRead.Trained rejects iters < 1") {
+    val e = intercept[IllegalArgumentException](Trained(iters = 0))
+    assert(e.getMessage.contains("iters must be >= 1"), e.getMessage)
+  }
+
+  test("field combinations no registry entry uses run through the one " +
+    "body: Inline agrees with the persisted layout under tombstones and " +
+    "under a shadow buffer") {
+    val main = Similarity.ensureIvfIndex(spark, sf0001)
+    val buffer = Similarity.freshBuffer(spark, sf0001)
+    def rows(r: AnnRead) = r(spark, sf0001).collect().map(_.toSeq).toList
+    val inlineTomb = rows(AnnRead(tombstones = true))
+    assert(inlineTomb.nonEmpty)
+    assert(inlineTomb.forall(r => r(2).asInstanceOf[Long] % 7 != 3),
+      "a tombstoned candidate survived the Inline read")
+    assert(inlineTomb == rows(AnnRead(layout = At(main), tombstones = true)),
+      "Inline + tombstones must equal the s26 read row-for-row")
+    val inlineShadow = rows(AnnRead(shadow = Some(buffer)))
+    assert(inlineShadow != rows(AnnRead()),
+      "the buffer must change top-k on this corpus")
+    assert(inlineShadow == rows(AnnRead(layout = At(main), shadow = Some(buffer))),
+      "Inline + shadow must equal the persisted-layout shadow read")
   }
 }

@@ -121,4 +121,13 @@ class MinMaxVecSpec extends SparkSpec {
         conf.set("spark.sql.codegen.factoryMode", _))
     }
   }
+
+  test("a wrong-typed column fails analysis, not a task") {
+    // array<bigint> is no vector column: the kernel's type check must
+    // reject it while the plan is analyzed, before any task reads a
+    // long slot as a double
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(Seq(1L, 2L)).toDF("emb").groupBy().agg(MinMaxVec(col("emb"))))
+    assert(e.getMessage.contains("minmax_vec"), e.getMessage)
+  }
 }

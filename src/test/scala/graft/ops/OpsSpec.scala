@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.Similarity.AnnRead
+import graft.ops.Similarity.AnnRead.{At, Current, Router, Trained}
 import org.apache.spark.sql.functions.{col, unix_millis}
 
 /** Sanity checks on the judge-visible query set at sf0.001 (full
@@ -579,7 +581,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("IVF topk: k per query, and probed-cell results overlap brute force") {
-    val ivf = Similarity.ivfTopK(spark, sf0001, nQueries = 5, k = 3)
+    val ivf = AnnRead(nQueries = 5, k = 3)(spark, sf0001)
       .collect()
     assert(ivf.length == 15)
     val brute = Similarity.bruteForceTopK(spark, sf0001, nQueries = 5, k = 3)
@@ -595,15 +597,15 @@ class OpsSpec extends SparkSpec {
     // cprobe = ncoarse makes level 1 a no-op (every coarse cell
     // probed, so level 2 ranks the full fine codebook) — the result
     // must equal ivfTopK row-for-row, the identity the scaladoc pins
-    val oneLevel = Similarity.ivfTopK(spark, sf0001)
+    val oneLevel = AnnRead()(spark, sf0001)
       .collect().map(_.toSeq).toList
-    val exhaustive = Similarity.ivf2TopK(spark, sf0001, cprobe = 8)
+    val exhaustive = AnnRead(router = Some(Router(cprobe = 8)))(spark, sf0001)
       .collect().map(_.toSeq).toList
     assert(exhaustive == oneLevel,
       "cprobe=ncoarse two-level IVF must reduce to one-level IVF exactly")
     // the registry configuration (cprobe=3 of 8): k rows per query,
     // ranks contiguous from 1, sims within [-1, 1] after r4
-    val routed = Similarity.ivf2TopK(spark, sf0001).collect()
+    val routed = AnnRead(router = Some(Router()))(spark, sf0001).collect()
     val perQ = routed.groupBy(_.getAs[Long]("q_id"))
     assert(perQ.size == 10)
     perQ.foreach { case (q, rows) =>
@@ -633,16 +635,18 @@ class OpsSpec extends SparkSpec {
     // equal s07 row-for-row: same persisted codebook, same corpus
     // assignment, same probe cut, same exact re-rank — the identity
     // that certifies the composition introduced nothing of its own
-    val oneLevel = Similarity.ivfTopKTrained(spark, sf0001)
+    val oneLevel = AnnRead(codebook = Trained())(spark, sf0001)
       .collect().map(_.toSeq).toList
-    val exhaustive = Similarity.ivf2TopKTrained(spark, sf0001, cprobe = 8)
+    val exhaustive = AnnRead(codebook = Trained(),
+      router = Some(Router(cprobe = 8)))(spark, sf0001)
       .collect().map(_.toSeq).toList
     assert(exhaustive == oneLevel,
       "cprobe=ncoarse trained-routed IVF must reduce to s07 exactly")
     // the registry configuration (cprobe=3): well-formed per-query
     // lists, and sims on the overlap agree with the exhaustive run
     // (same exact scoring — routing may only restrict the pool)
-    val routed = Similarity.ivf2TopKTrained(spark, sf0001).collect()
+    val routed = AnnRead(codebook = Trained(), router = Some(Router()))(
+      spark, sf0001).collect()
     val perQ = routed.groupBy(_.getAs[Long]("q_id"))
     assert(perQ.size == 10)
     perQ.foreach { case (q, rows) =>
@@ -2279,7 +2283,7 @@ class OpsSpec extends SparkSpec {
       val np = r.getLong(0).toInt
       // the shared-pass curve must reproduce what the standalone s05
       // query at this nprobe would score
-      val ivf = Similarity.ivfTopK(spark, sf0001, nprobe = np).collect()
+      val ivf = AnnRead(nprobe = np)(spark, sf0001).collect()
         .map(x => (x.getLong(0), x.getLong(2)))
       val hits = ivf.count(truth.contains).toLong
       assert(r.getLong(1) == hits, s"nprobe $np hits")
@@ -2360,7 +2364,7 @@ class OpsSpec extends SparkSpec {
   test("s18: IVF-PQ equals the PQ ranking restricted to the IVF candidate set") {
     // full candidate sets per query: ivfTopK with k beyond any cell
     // size returns every probed-cell candidate, exact-ranked
-    val cands = Similarity.ivfTopK(spark, sf0001, k = 10000).collect()
+    val cands = AnnRead(k = 10000)(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
       .map { case (q, xs) => q -> xs.map(_._2).toSet }
     // full PQ-ADC ranking of all pairs (same tie contract as s18)
@@ -2876,7 +2880,7 @@ class OpsSpec extends SparkSpec {
     assert(curve.map(_.getLong(0)).toSeq == Seq(1L, 2L, 4L, 8L))
     curve.foreach { r =>
       val np = r.getLong(0).toInt
-      val ranked = Similarity.ivfTopK(spark, sf0001, nprobe = np).collect()
+      val ranked = AnnRead(nprobe = np)(spark, sf0001).collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
       val hits = ranked.filter { case (q, _, c) => truth((q, c)) }
       // exact-rerank retrieval puts every hit in a PREFIX of the list

@@ -1,6 +1,9 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.Similarity.AnnRead
+import graft.ops.Similarity.AnnRead.{At, Current, Router, Trained}
+import org.apache.spark.sql.functions.col
 import graft.stream.{PartitionPreview, PartitionPreviewExec, Pipe}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -109,7 +112,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("s05: IVF codebook and probe tables broadcast; corpus never SMJs") {
-    val p = plan(Similarity.ivfTopK(spark, sf0001))
+    val p = plan(AnnRead()(spark, sf0001))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"))
     assert(!p.contains("SortMergeJoin"),
       "IVF probe joins must broadcast — the corpus side cannot shuffle-sort at scale")
@@ -117,7 +120,7 @@ class PlanSpec extends SparkSpec {
 
   test("s20: two-level routing adds no shuffle over s05 — both codebooks, " +
       "the route, and all probe tables broadcast; no window anywhere") {
-    val df = Similarity.ivf2TopK(spark, sf0001)
+    val df = AnnRead(router = Some(Router()))(spark, sf0001)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("SortMergeJoin"),
@@ -132,7 +135,8 @@ class PlanSpec extends SparkSpec {
       "filter BEFORE the bounded-heap ranking, composed with DPP, " +
       "everything else s29's plan shape") {
     Similarity.ensureIvfIndex(spark, sf0001)
-    val df = Similarity.ivf2TopKCurrentFiltered(spark, sf0001)
+    val df = AnnRead(layout = Current, router = Some(Router()),
+      filter = Some(col("label") === 2))(spark, sf0001)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     // the predicate reaches the SCAN (PushedFilters), so qualifying
@@ -151,7 +155,7 @@ class PlanSpec extends SparkSpec {
   test("s31: routing over the trained codebook keeps s20's shape — " +
       "codebook lineage is ONE artifact file scan, no training joins, " +
       "no SMJ, bounded-heap ranking") {
-    val df = Similarity.ivf2TopKTrained(spark, sf0001)
+    val df = AnnRead(codebook = Trained(), router = Some(Router()))(spark, sf0001)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("SortMergeJoin"),
@@ -189,13 +193,17 @@ class PlanSpec extends SparkSpec {
     // cutting at k, which at 100 TB is a spilling sort, not a pipeline.
     Seq("s02" -> Similarity.lshTopK(spark, sf0001),
         "s04" -> Similarity.nativeTopK(spark, sf0001),
-        "s05" -> Similarity.ivfTopK(spark, sf0001),
-        "s07" -> Similarity.ivfTopKTrained(spark, sf0001),
+        "s05" -> AnnRead()(spark, sf0001),
+        "s07" -> AnnRead(codebook = Trained())(spark, sf0001),
         "c05" -> Curation.qualityQuota(spark, sf0001)).foreach { case (name, df) =>
       df.collect()
       val p = finalOnly(df.queryExecution.executedPlan.toString)
       assert(!p.contains("Window"), s"$name plans a Window sort")
       assert(p.contains("topk_rows"), s"$name missing the bounded-heap topk_rows kernel")
+      // s07 assigns cells in-row like s05: no per-vector groupBy
+      // exchange and no corpus re-join on c_id
+      if (name == "s07") assert(!p.contains("hashpartitioning(c_id"),
+        s"s07 shuffles the corpus on c_id:\n$p")
     }
   }
 

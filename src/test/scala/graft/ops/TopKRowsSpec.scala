@@ -101,4 +101,16 @@ class TopKRowsSpec extends SparkSpec {
       assert(!p.contains(node),
         s"the ranking path must not pay the $node object conversion")
   }
+
+  test("wrong-typed id or score fails analysis, not a task") {
+    // an int id and a float score would each reach `update`'s unboxing
+    // cast as a ClassCastException inside a task; the kernel's type
+    // check rejects both while the plan is analyzed
+    Seq(Seq((1L, 7, 0.5)).toDF("q_id", "c_id", "sim"),
+        Seq((1L, 7L, 0.5f)).toDF("q_id", "c_id", "sim")).foreach { df =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.groupBy("q_id").agg(TopKRows(3, col("c_id"), col("sim"))))
+      assert(e.getMessage.contains("topk_rows"), e.getMessage)
+    }
+  }
 }

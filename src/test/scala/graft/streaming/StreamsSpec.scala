@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.ops.Similarity.AnnRead
+import graft.ops.Similarity.AnnRead.{At, Current, Router, Trained}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -1178,7 +1180,7 @@ class StreamsSpec extends SparkSpec {
     val q = mem.toDF().writeStream.foreachBatch {
       (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           id: Long) =>
-        val df = Similarity.ivf2TopKCurrent(s, sf0001)
+        val df = AnnRead(layout = Current, router = Some(Router()))(s, sf0001)
         val rows = df.collect().map(_.toSeq).toList
         seen += ((id, Similarity.ivfCurrentEpoch(s, sf0001),
           df.queryExecution.executedPlan.toString.contains("LeftAnti"),
@@ -1297,7 +1299,8 @@ class StreamsSpec extends SparkSpec {
     val q = mem.toDF().writeStream.foreachBatch {
       (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           id: Long) =>
-        val df = Similarity.ivf2TopKProduction(s, sf0001)
+        val df = AnnRead(codebook = Trained(), layout = Current,
+          router = Some(Router()), filter = Some(col("label") === 2))(s, sf0001)
         val rows = df.collect().map(_.toSeq).toList
         seen += ((id, Similarity.trainedIvfEpoch(s, sf0001),
           df.queryExecution.executedPlan.toString.contains("LeftAnti"),
@@ -1358,8 +1361,8 @@ class StreamsSpec extends SparkSpec {
     val q = mem.toDF().writeStream.foreachBatch {
       (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           id: Long) =>
-        val df = Similarity.ivf2TopKTrainedCurrent(s, sf0001,
-          shadow = Some(buffer))
+        val df = AnnRead(codebook = Trained(), layout = Current,
+          router = Some(Router()), shadow = Some(buffer))(s, sf0001)
         seen += ((id,
           df.queryExecution.executedPlan.toString.contains("Union"),
           df.collect().map(_.toSeq).toList))
