@@ -4,19 +4,7 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC explicitly, not via build.sbt's forked -D flag: the NTZ
-      // events cast (Relational.events) is value-preserving only
-      // under a UTC session — an entry point launched outside the
-      // sbt fork (spark-submit) must not silently shift event time
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Scale-run knobs (defaults preserve the certified sf0.1 protocol
     // exactly): SPARK_GRAFT_SESSION_CONF="k=v;k=v" sets session confs
     // (e.g. graft.neardup.n / graft.pq.dim for a derived corpus);
@@ -28,20 +16,16 @@ object Bench {
     // total line so a reader knows min-of-how-many produced it).
     sys.env.get("SPARK_GRAFT_SESSION_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
-    val skipped = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
+    val skipped = sys.env.get("SPARK_GRAFT_SKIP").map(Harness.names)
+      .getOrElse(Set.empty[String])
     // SPARK_GRAFT_ONLY="name,name" restricts the run to the named
     // queries — the scale-PROBE knob (e.g. timing just the measured
     // superlinear tail at ×64 without paying a full-suite pass).
     // Announced in the JSON ("only" list) so a probe artifact can
-    // never masquerade as a full-registry run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val missing = names -- SparkEntry.queries.keySet
-      require(missing.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${missing.toSeq.sorted.mkString(",")}")
-    }
+    // never masquerade as a full-registry run. A typo'd name in
+    // either list fails here, before any pass.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(Harness.names)
+    val ordered = Harness.select(only, skipped)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
     // SPARK_GRAFT_CONSUME=collect drives every timed query through
     // .collect() instead of .count() — the prune-hidden-family probe:
@@ -109,9 +93,6 @@ object Bench {
     // unexplained timing anomaly downstream.
     Harness.ensureArtifacts(spark, sfDir, "bench",
       "will pay the build inside their timed pass")
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => skipped.contains(n) }
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     ordered.foreach { case (_, fn) =>
       try consume(fn(spark, sfDir)) catch { case NonFatal(_) => }
       spark.catalog.clearCache()

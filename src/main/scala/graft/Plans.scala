@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Plan dump for the optimization rounds: writes `.explain("formatted")`
@@ -14,41 +13,32 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val (outDir, suffix, only) = args match {
       case Array(a, b)    => (a, b, None)
-      case Array(a, b, f) => (a, b, Some(f.split(",").filter(_.nonEmpty).toSet))
+      case Array(a, b, f) => (a, b, Some(Harness.names(f)))
       case _ =>
         System.err.println(
           "usage: graft.Plans <outDir> <suffix> [name,name,...]")
         sys.exit(2)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = Harness.select(only, Set.empty)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // same pre-built artifacts as Bench: the plans must describe the
     // artifact-served reads the bench times, not inline rebuilds — a
     // failed build must be visible in the dump log
     Harness.ensureArtifacts(spark, sfDir, "plans",
       "get dumped with INLINE-REBUILD plan shapes")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[plans] $name failed: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
+    queries.foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[plans] $name failed: ${e.getMessage}")
       }
+      spark.catalog.clearCache()
+    }
     spark.stop()
   }
 }

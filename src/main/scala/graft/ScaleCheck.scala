@@ -125,14 +125,7 @@ object ScaleCheck {
     val k = args.headOption.map(_.toInt).getOrElse(4)
     val seed = "/root/testdata/sf0.1"
     val base = "/tmp/graft_scale"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // `full` additionally derives the TPC-H star schema at each scale
     // (same dirs), making /tmp/graft_scale/x{1,K} a complete sf-dir

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions.col
 import graft.ops._
 import graft.ops.Similarity.AnnRead
 import graft.ops.Similarity.AnnRead.{At, Current, Router, Trained}
+import graft.ops.Layout.{CurveCut, FirstDimCut, Hilbert, Locality, Morton, Segments}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -18,6 +19,15 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.pricingSummary(spark, "/root/testdata/sf0.001")
+
+  /** The layout cube (customer, order day, price cents) of l04-l07. */
+  private val cube = Seq("ck", "day", "cents")
+  /** l06's two 3-d curves on the same non-dyadic cuts; l07 is its
+    * per-segment table. */
+  private val cubeCurves = Segments(cube,
+    Seq("hilbert3d" -> CurveCut(Hilbert, 3, Layout.pruneGrain3),
+      "zorder3d" -> CurveCut(Morton, 3, Layout.pruneGrain3)),
+    Layout.queryBox, perSegment = false)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -84,34 +94,44 @@ object SparkEntry {
     // q46: hierarchical HLL rollup — per-nation sketches UNION-merged
     // to regions; the q24b within-tolerance certification shape
     "q46_hll_rollup" -> (Relational.hllRollup _),
+    // — layout family: values of the two Layout report bodies (field
+    // → entry table in the Locality and Segments scaladocs) —
     // l01: z-order (Morton) layout locality — per curve-segment
     // bounding rectangles over (custkey, order-day), the measurable
     // form of multi-dimensional file-skipping
-    "l01_zorder" -> (Layout.zorderLocality _),
+    "l01_zorder" -> Locality(Morton, Seq("ck", "day"), keepBits = 8),
     // l02: Hilbert-curve locality — the no-jump curve via a native
     // codegen kernel; same report shape as l01 for direct comparison
-    "l02_hilbert" -> (Layout.hilbertLocality _),
+    "l02_hilbert" -> Locality(Hilbert, Seq("ck", "day"), keepBits = 8),
     // l03: read-side pruning simulation — buckets touched by a fixed
     // dual-dim predicate under each layout's row-group statistics,
     // at a non-dyadic segment grain where the curves genuinely differ
-    "l03_curve_pruning" -> (Layout.curvePruning _),
+    "l03_curve_pruning" -> Segments(Seq("ck", "day"),
+      Seq("zorder" -> CurveCut(Morton, 2, Layout.pruneGrain),
+        "hilbert" -> CurveCut(Hilbert, 2, Layout.pruneGrain),
+        "single_ck" -> FirstDimCut(256L)),
+      Layout.queryBox.take(2), perSegment = false),
     // l04: the layout family past two axes — 3-d Morton over the
     // (customer, day, price-cents) cube, 4096 boxes each bounding
     // ALL THREE predicate columns
-    "l04_zorder3d" -> (Layout.zorder3Locality _),
+    "l04_zorder3d" -> Locality(Morton, cube, keepBits = 12),
     // l05: the cube's pruning MEASURED at arbitrary-cut grain against
     // the 2-d curve and single-key — incl. the honest straddle finding
-    "l05_cube_pruning" -> (Layout.cubePruning _),
+    "l05_cube_pruning" -> Segments(cube,
+      Seq("zorder3d" -> CurveCut(Morton, 3, Layout.pruneGrain3),
+        "zorder2d_ck_day" -> CurveCut(Morton, 2, Layout.pruneGrain),
+        "single_ck" -> FirstDimCut(256L)),
+      Layout.queryBox, perSegment = false),
     // l06: the straddle finding's FIX measured — the no-jump 3-d
     // Hilbert key (Skilling kernel) vs 3-d Morton on the same cuts
-    "l06_cube_hilbert" -> (Layout.cubePruningHilbert _),
+    "l06_cube_hilbert" -> cubeCurves,
     // l07: the per-segment statistics-box TABLE behind l06's summary
     // — box bounds, row counts, integer volume, and the reader's
     // min/max skip verdict for every file-grain segment of BOTH 3-d
     // curves, putting the on-disk layout claim (Hilbert boxes ~half
     // of Morton's volume at identical cuts — the OpsSpec real-footer
     // measurement) under the cross-engine gate
-    "l07_cube_file_boxes" -> (Layout.cubeFileBoxes _),
+    "l07_cube_file_boxes" -> cubeCurves.copy(perSegment = true),
     // — event analytics (SURVEY §2.8 event-time re-grounding) —
     "e01_hourly" -> (Events.hourlyStats _),
     "e02_sessions" -> (Events.sessionStats _),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -10,25 +9,20 @@ object Verify {
     // filter for verifying a new operator without the full dump
     val (sfDir, outDir, only) = args match {
       case Array(a, b)    => (a, b, None)
-      case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
+      case Array(a, b, f) => (a, b, Some(Harness.names(f)))
+      case _ =>
+        System.err.println(
+          "usage: graft.Verify <sfDir> <outDir> [name,name,...]")
+        sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = Harness.select(only, Set.empty)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // setup: persisted-artifact queries read pre-built layouts;
     // building here keeps the query runs themselves pure readers
     Harness.ensureArtifacts(spark, sfDir, "verify",
       "rebuild the artifact inline")
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>

@@ -27,10 +27,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * `nullSafeEval` and the generated Java are the same statements.
   *
   * Certification: the kernel is live in the l06 registry query
-  * ([[graft.ops.Layout.cubePruningHilbert]]), whose DuckDB oracle
+  * (a [[graft.ops.Layout.Segments]] value keyed by
+  * [[graft.ops.Layout.Hilbert]]), whose DuckDB oracle
   * replays Skilling's plane sweeps as 42 generated MATERIALIZED
   * CTE stages — one engine certifying the other's kernel
-  * bit-for-bit — and in the [[graft.ops.Layout.hilbert3Write]]
+  * bit-for-bit — and in the 3-d [[graft.ops.Layout.curveWrite]]
   * write path. Spec-side, OpsSpec enumerates full
   * sub-lattices at orders 2..4 through the COLUMN path and asserts
   * the two properties only a genuine 3-d Hilbert curve satisfies —

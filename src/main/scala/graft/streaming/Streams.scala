@@ -864,33 +864,29 @@ object Streams {
   /** Streaming curve-clustered layout maintenance — the l01 layout
     * kept TRUE under continuous ingestion (the streaming face of
     * Delta/Iceberg's OPTIMIZE ZORDER): every micro-batch lands as its
-    * own z-clustered increment via the SAME
-    * [[graft.ops.Layout.zorderWrite]] the batch path uses (one range
-    * exchange on the batch's z, in-partition sort, curve key dropped
-    * from storage), so file-level min/max stays selective on BOTH
-    * dimensions for every increment without ever rewriting history —
-    * readers union `baseDir\/batch=*` and prune per increment. At
-    * 100 TB/day this is the ingest shape: layout cost is ∝ the batch,
-    * compaction across increments stays an offline
-    * [[graft.ops.Layout.zorderWrite]] over any horizon you choose.
-    * Quantization bounds are PER BATCH (each increment's curve spans
-    * its own data) — the documented trade vs a frozen global
+    * own curve-clustered increment via the SAME
+    * [[graft.ops.Layout.curveWrite]] the batch path uses (one range
+    * exchange on the batch's `curve` key, in-partition sort, key
+    * dropped from storage), so file-level min/max stays selective on
+    * BOTH dimensions for every increment without ever rewriting
+    * history — readers union `baseDir\/batch=*` and prune per
+    * increment. At 100 TB/day this is the ingest shape: layout cost
+    * is ∝ the batch, and compaction across increments is
+    * [[graft.ops.Layout.compactIncrements]] over any horizon you
+    * choose. Quantization bounds are PER BATCH (each increment's curve
+    * spans its own data) — the documented trade vs a frozen global
     * quantizer, which [[graft.ops.Layout.quant16]] also supports by
     * passing fixed bounds. Returns the started query (caller stops
     * it). */
   def zorderedIngest(df: DataFrame, dimA: String, dimB: String,
       baseDir: String, files: Int, checkpoint: String,
-      hilbert: Boolean = false) =
+      curve: graft.ops.Layout.Curve = graft.ops.Layout.Morton) =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val out = s"$baseDir/batch=$id"
-          if (hilbert)
-            graft.ops.Layout.hilbertWrite(batch.toDF(), dimA, dimB, out, files)
-          else
-            graft.ops.Layout.zorderWrite(batch.toDF(), dimA, dimB, out, files)
-        }
+        if (!batch.isEmpty)
+          graft.ops.Layout.curveWrite(batch.toDF(), curve, Seq(dimA, dimB),
+            s"$baseDir/batch=$id", files)
       }
       .outputMode(OutputMode.Append())
       .start()

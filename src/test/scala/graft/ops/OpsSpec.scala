@@ -3206,7 +3206,7 @@ class OpsSpec extends SparkSpec {
         rows.map(_._3).min, rows.map(_._3).max,
         rows.map(_._4).min, rows.map(_._4).max)
     }
-    val rep = Layout.zorder3Locality(spark, sf0001).collect()
+    val rep = graft.SparkEntry.queries("l04_zorder3d")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
     assert(rep.toSeq == model, s"\n got  ${rep.take(3).toSeq}…\n model ${model.take(3)}…")
@@ -3221,7 +3221,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("l01 z-buckets bound BOTH dims (the multi-dim pruning property)") {
-    val rows = Layout.zorderLocality(spark, sf0001).collect()
+    val rows = graft.SparkEntry.queries("l01_zorder")(spark, sf0001).collect()
     assert(rows.map(_.getLong(0)).distinct.length == rows.length)
     val ckLo = rows.map(_.getLong(2)).min; val ckHi = rows.map(_.getLong(3)).max
     val dayLo = rows.map(_.getLong(4)).min; val dayHi = rows.map(_.getLong(5)).max
@@ -3247,7 +3247,7 @@ class OpsSpec extends SparkSpec {
       col("o_custkey").cast("long").as("ck"),
       org.apache.spark.sql.functions.datediff(col("o_orderdate"),
         org.apache.spark.sql.functions.lit("1992-01-01")).cast("long").as("day"))
-    Layout.zorderWrite(o, "ck", "day", dir, files = 8)
+    Layout.curveWrite(o, Layout.Morton, Seq("ck", "day"), dir, files = 8)
     val all = o.collect().map(r => (r.getLong(1), r.getLong(2)))
     val ckSpan = (all.map(_._1).max - all.map(_._1).min).toDouble.max(1)
     val daySpan = (all.map(_._2).max - all.map(_._2).min).toDouble.max(1)
@@ -3296,7 +3296,7 @@ class OpsSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit("1992-01-01")).cast("long").as("day"),
       org.apache.spark.sql.functions.floor(col("o_totalprice") *
         org.apache.spark.sql.functions.lit(100)).cast("long").as("cents"))
-    Layout.zorder3Write(o, "ck", "day", "cents", dir, files = 32)
+    Layout.curveWrite(o, Layout.Morton, Seq("ck", "day", "cents"), dir, files = 32)
     val all = o.collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     def span(xs: Seq[Long]) = (xs.max - xs.min).toDouble.max(1)
     val (ckS, dayS, cS) = (span(all.map(_._1).toSeq),
@@ -3338,13 +3338,32 @@ class OpsSpec extends SparkSpec {
     assert(zDay <= 0.7 * bDay, s"z3 day span $zDay vs baseline $bDay")
     assert(zC <= 0.7 * bC, s"z3 cents span $zC vs baseline $bC")
     assert(zCk <= 0.8, s"z3 ck span $zCk")
-    // reserved-prefix guard refuses loudly
-    val boom = intercept[IllegalArgumentException] {
-      Layout.zorder3Write(o.withColumn("__z_curve_key",
-        org.apache.spark.sql.functions.lit(1L)),
-        "ck", "day", "cents", dir, files = 2)
+    // reserved-prefix guard refuses loudly, 3-d and 2-d
+    for (dims <- Seq(Seq("ck", "day", "cents"), Seq("ck", "day"))) {
+      val boom = intercept[IllegalArgumentException] {
+        Layout.curveWrite(o.withColumn("__z_curve_key",
+          org.apache.spark.sql.functions.lit(1L)),
+          Layout.Morton, dims, dir, files = 2)
+      }
+      assert(boom.getMessage.contains("__z"))
     }
-    assert(boom.getMessage.contains("__z"))
+  }
+
+  test("curve layouts take 2 or 3 dimensions: curveWrite and Locality " +
+    "reject any other count with a message") {
+    val o = spark.range(16).select(col("id").as("a"), (col("id") * 2).as("b"),
+      (col("id") * 3).as("c"), (col("id") * 5).as("d"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-dims").toString
+    for (dims <- Seq(Seq("a"), Seq("a", "b", "c", "d"))) {
+      val boom = intercept[IllegalArgumentException] {
+        Layout.curveWrite(o, Layout.Hilbert, dims, dir, files = 2)
+      }
+      assert(boom.getMessage.contains(s"got ${dims.length}"), boom.getMessage)
+    }
+    val boom = intercept[IllegalArgumentException] {
+      Layout.Locality(Layout.Morton, Seq("ck"), keepBits = 8)(spark, sf0001)
+    }
+    assert(boom.getMessage.contains("2 or 3 dimensions"), boom.getMessage)
   }
 
   test("hilbert3Write layout: physical file boxes beat morton's at identical " +
@@ -3366,8 +3385,8 @@ class OpsSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit(100)).cast("long").as("cents"))
     val hDir = java.nio.file.Files.createTempDirectory("graft-h3").toString
     val zDir = java.nio.file.Files.createTempDirectory("graft-z3m").toString
-    Layout.hilbert3Write(o, "ck", "day", "cents", hDir, files = 17)
-    Layout.zorder3Write(o, "ck", "day", "cents", zDir, files = 17)
+    Layout.curveWrite(o, Layout.Hilbert, Seq("ck", "day", "cents"), hDir, files = 17)
+    Layout.curveWrite(o, Layout.Morton, Seq("ck", "day", "cents"), zDir, files = 17)
     val Array(b) = o.agg(min("ck"), max("ck"), min("day"), max("day"),
       min("cents"), max("cents")).collect()
     val spans = Seq((b.getLong(1) - b.getLong(0)).toDouble.max(1),
@@ -3417,9 +3436,9 @@ class OpsSpec extends SparkSpec {
     assert(th <= tz, s"hilbert3 must touch at most morton's files: $th vs $tz")
     // the reserved-prefix guard covers the hilbert path too
     val boom = intercept[IllegalArgumentException] {
-      Layout.hilbert3Write(o.withColumn("__z_curve_key",
+      Layout.curveWrite(o.withColumn("__z_curve_key",
         org.apache.spark.sql.functions.lit(1L)),
-        "ck", "day", "cents", hDir, files = 2)
+        Layout.Hilbert, Seq("ck", "day", "cents"), hDir, files = 2)
     }
     assert(boom.getMessage.contains("__z"))
   }
@@ -3441,8 +3460,8 @@ class OpsSpec extends SparkSpec {
     val zDir = java.nio.file.Files.createTempDirectory("graft-prune-z").toString
     val hDir = java.nio.file.Files.createTempDirectory("graft-prune-h").toString
     val sDir = java.nio.file.Files.createTempDirectory("graft-prune-s").toString
-    Layout.zorderWrite(o, "ck", "day", zDir, files = 16)
-    Layout.hilbertWrite(o, "ck", "day", hDir, files = 16)
+    Layout.curveWrite(o, Layout.Morton, Seq("ck", "day"), zDir, files = 16)
+    Layout.curveWrite(o, Layout.Hilbert, Seq("ck", "day"), hDir, files = 16)
     o.repartitionByRange(16, col("ck")).sortWithinPartitions("ck")
       .write.mode("overwrite").parquet(sDir)
     val Array(b) = o.agg(min("ck"), max("ck"), min("day"), max("day")).collect()
@@ -3516,7 +3535,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("l03 pruning simulation: hilbert <= zorder < single_ck; rows agree") {
-    val rows = Layout.curvePruning(spark, sf0001).collect()
+    val rows = graft.SparkEntry.queries("l03_curve_pruning")(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(rows.keySet == Set("hilbert", "single_ck", "zorder"))
     val (_, hT, hR) = rows("hilbert")
@@ -3529,7 +3548,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("l05 cube pruning: zorder3d < zorder2d < single_ck on the triple-dim box; rows agree") {
-    val rows = Layout.cubePruning(spark, sf0001).collect()
+    val rows = graft.SparkEntry.queries("l05_cube_pruning")(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(rows.keySet == Set("zorder3d", "zorder2d_ck_day", "single_ck"))
     val (_, t3, r3b) = rows("zorder3d")
@@ -3797,7 +3816,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("l06: the no-jump 3-d key strictly beats 3-d morton on the same cuts; rows agree") {
-    val rows = Layout.cubePruningHilbert(spark, sf0001).collect()
+    val rows = graft.SparkEntry.queries("l06_cube_hilbert")(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(rows.keySet == Set("hilbert3d", "zorder3d"))
     val (_, hT, hR) = rows("hilbert3d")
@@ -3846,8 +3865,8 @@ class OpsSpec extends SparkSpec {
         (r.getLong(5) - r.getLong(4)) / ds))
       (fr.map(_._1).sum / fr.length, fr.map(_._2).sum / fr.length)
     }
-    val (hCk, hDay) = spans(Layout.hilbertLocality(spark, sf0001).collect())
-    val (zCk, zDay) = spans(Layout.zorderLocality(spark, sf0001).collect())
+    val (hCk, hDay) = spans(graft.SparkEntry.queries("l02_hilbert")(spark, sf0001).collect())
+    val (zCk, zDay) = spans(graft.SparkEntry.queries("l01_zorder")(spark, sf0001).collect())
     info(f"avg span fractions — hilbert (ck $hCk%.4f, day $hDay%.4f), z (ck $zCk%.4f, day $zDay%.4f)")
     assert(hCk < 0.25 && hDay < 0.25, "hilbert buckets must bound both dims")
     // at this DYADIC grain the two curves induce the identical cell

@@ -515,7 +515,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("l01: z computation is in-scan project; one hash shuffle for the bucket agg") {
-    val df = Layout.zorderLocality(spark, sf0001)
+    val df = graft.SparkEntry.queries("l01_zorder")(spark, sf0001)
     val p = plan(df)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       "dimension bounds must broadcast")
@@ -527,7 +527,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("l02: hilbert kernel runs in-scan; one hash shuffle; codegen span holds") {
-    val df = Layout.hilbertLocality(spark, sf0001)
+    val df = graft.SparkEntry.queries("l02_hilbert")(spark, sf0001)
     val p = plan(df)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       "dimension bounds must broadcast")
@@ -541,7 +541,7 @@ class PlanSpec extends SparkSpec {
 
   test("l06: hilbert3 kernel runs in-scan and its codegen span holds " +
     "(no interpreted fallback)") {
-    val df = Layout.cubePruningHilbert(spark, sf0001)
+    val df = graft.SparkEntry.queries("l06_cube_hilbert")(spark, sf0001)
     val p = plan(df)
     assert(p.contains("hilbert_index3"), "the native 3-d kernel must appear in the plan")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
@@ -566,7 +566,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("l03: one scan fans out to all three layout keys; one bucket-agg shuffle") {
-    val df = Layout.curvePruning(spark, sf0001)
+    val df = graft.SparkEntry.queries("l03_curve_pruning")(spark, sf0001)
     val p = plan(df)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       "dimension bounds must broadcast")
@@ -677,10 +677,10 @@ class PlanSpec extends SparkSpec {
     // attributes and literals — no hilbert/morton arithmetic.
     import org.apache.spark.sql.catalyst.plans.logical.Generate
     for ((name, df) <- Seq(
-        "l03" -> Layout.curvePruning(spark, sf0001),
-        "l05" -> Layout.cubePruning(spark, sf0001),
-        "l06" -> Layout.cubePruningHilbert(spark, sf0001),
-        "l07" -> Layout.cubeFileBoxes(spark, sf0001))) {
+        "l03" -> graft.SparkEntry.queries("l03_curve_pruning")(spark, sf0001),
+        "l05" -> graft.SparkEntry.queries("l05_cube_pruning")(spark, sf0001),
+        "l06" -> graft.SparkEntry.queries("l06_cube_hilbert")(spark, sf0001),
+        "l07" -> graft.SparkEntry.queries("l07_cube_file_boxes")(spark, sf0001))) {
       val gens = df.queryExecution.optimizedPlan.collect { case g: Generate => g }
       assert(gens.nonEmpty, s"$name lost its layout explode entirely")
       gens.foreach { g =>

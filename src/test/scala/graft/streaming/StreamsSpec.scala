@@ -113,7 +113,8 @@ class StreamsSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-hingest-ck").toString
     val mem = MemoryStream[(Long, Long)]
     val q = Streams.zorderedIngest(mem.toDF().toDF("ck", "day"),
-      "ck", "day", base, files = 4, checkpoint = ckpt, hilbert = true)
+      "ck", "day", base, files = 4, checkpoint = ckpt,
+      curve = graft.ops.Layout.Hilbert)
     try {
       val grid = for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y)
       mem.addData(grid: _*)
@@ -153,7 +154,7 @@ class StreamsSpec extends SparkSpec {
       q.processAllAvailable()
       val out = java.nio.file.Files.createTempDirectory("graft-compact").toString
       graft.ops.Layout.compactIncrements(s, base, "ck", "day", out,
-        files = 8, hilbert = true)
+        files = 8, curve = graft.ops.Layout.Hilbert)
       val all = s.read.parquet(out).collect()
       assert(all.length == 2 * grid.length, "compaction lost rows")
       val cFiles = new java.io.File(out).listFiles().filter(f =>
