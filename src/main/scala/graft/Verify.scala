@@ -1,8 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected SparkEntry.queries result → parquet,
+  * plus oracle_sql.json (the selected queries' oracle SQL), for the
+  * DuckDB compare in tools/compare.py. A query that reads a persisted
+  * artifact builds it on first use, inside its own try. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional third arg: comma-separated query names — dev-loop
@@ -18,10 +20,6 @@ object Verify {
     val queries = Harness.select(only, Set.empty)
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // setup: persisted-artifact queries read pre-built layouts;
-    // building here keeps the query runs themselves pure readers
-    Harness.ensureArtifacts(spark, sfDir, "verify",
-      "rebuild the artifact inline")
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -41,7 +39,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // the selected queries' oracles only: tools/compare.py counts an
+    // oracle with no output directory (a query that threw) as MISSING
+    val selected = queries.map(_._1).toSet
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -338,12 +338,13 @@ object Similarity {
     private def currentLayout(s: SparkSession, dir: String): (String, Boolean) = {
       val (marker, live, compact) = codebook match {
         case Seeded => (ivfEpochMarker(s, dir, nlist),
-          () => ensureIvfIndex(s, dir, nlist), ivfCompactPath(s, dir, nlist))
+          () => ensureIvfIndex(s, dir, nlist), seededIvf("compact", nlist))
         case Trained(iters) => (trainedEpochMarker(s, dir, nlist, iters),
           () => ensureTrainedIvfIndex(s, dir, nlist, iters),
-          trainedCompactPath(s, dir, nlist, iters))
+          trainedIvf(nlist, iters, "_compact"))
       }
-      if (epochOf(s, marker) == "compact") (compact, false) else (live(), true)
+      if (epochOf(s, marker) == "compact") (compact.path(s, dir), false)
+      else (live(), true)
     }
   }
 
@@ -494,54 +495,50 @@ object Similarity {
     * keeping them only leaks disk). */
   private val ivfFormatVersion = "v2"
 
-  /** Deterministic per-corpus location for the persisted IVF index,
-    * under the session's warehouse dir — the write-once/probe-forever
-    * storage contract made addressable from just the corpus dir (what
-    * lets a pure `(spark, dir) => DataFrame` query find its index). */
-  def ivfIndexPath(s: SparkSession, dir: String, nlist: Int = 32): String =
-    s"${ivfStampDir(s, dir)}/${mainIvfLeaf(nlist)}"
+  /** Every IVF layout and epoch pointer of one corpus generation lives
+    * at `<warehouse>/graft_ivf_index/<corpus tag>/st<stamp>/<name>`
+    * (the embeddings content stamp: a corpus re-derived in place gets
+    * a fresh build instead of serving neighbors from data that no
+    * longer exists). nlist is part of every name (an index built at a
+    * different cell count is a DIFFERENT index, and resolving one
+    * through the other would silently drop probes for cells the
+    * stored layout never wrote). The seeded family is
+    * `main_v2_nl<n>`, `compact_v2_nl<n>` and the `CURRENT_v2_nl<n>`
+    * pointer. */
+  private def ivfEntry(name: String): Artifact =
+    Artifact("graft_ivf_index", None, "embeddings", "/", Some(name))
 
-  /** ONE definition of the main layout's leaf name — shared by the
-    * address and the ensure so the two cannot drift. */
-  private def mainIvfLeaf(nlist: Int): String =
-    s"main_${ivfFormatVersion}_nl$nlist"
+  private def seededIvf(kind: String, nlist: Int): Artifact =
+    ivfEntry(s"${kind}_${ivfFormatVersion}_nl$nlist")
 
-  /** The compacted layout's address for the SAME (generation, nlist)
-    * family — nlist is part of BOTH layout addresses (the
-    * qualityModelPath every-hyperparameter discipline): an index
-    * built at a different cell count is a DIFFERENT index, and
-    * resolving one through the other would silently drop probes for
-    * cells the stored layout never wrote. */
-  private def ivfCompactPath(s: SparkSession, dir: String,
-      nlist: Int): String =
-    s"${ivfStampDir(s, dir)}/compact_${ivfFormatVersion}_nl$nlist"
+  /** The TRAINED family — `trained_v2_cbv1_nl<n>_it<i>` plus
+    * `_compact` and `_CURRENT`. EVERY semantic input is in the name:
+    * iters because an index assigned by a differently-trained codebook
+    * is a different index, and BOTH format versions — the layout's
+    * own ([[ivfFormatVersion]]) and the codebook's
+    * ([[codebookVersion]]): a codebook format bump retrains the
+    * centroids, and a trained layout whose cells were assigned by the
+    * OLD centroids must not be served against routing that uses the
+    * new ones (the r19 self-review find). */
+  private def trainedIvf(nlist: Int, iters: Int, suffix: String = ""): Artifact =
+    ivfEntry(s"trained_${ivfFormatVersion}_cb${codebookVersion}_nl${nlist}_it$iters$suffix")
 
-  /** The per-corpus-GENERATION directory both index layouts (main +
-    * compacted) live under: the embeddings table's content stamp is
-    * part of the address, so a corpus re-derived in place gets a
-    * fresh build instead of silently serving neighbors from data
-    * that no longer exists (the quality-model discipline; superseded
-    * generations are swept by [[ensureIvfIndex]]). */
-  private def ivfStampDir(s: SparkSession, dir: String): String = {
-    val stamp = Artifacts.contentStamp(s, dir, "embeddings")
-    s"${s.conf.get("spark.sql.warehouse.dir")}/graft_ivf_index/" +
-      s"${Artifacts.dirTag(dir)}/st$stamp"
+  /** A live layout's ensure: the [[Artifact]] ensure, then the
+    * superseded-format sweep of its generation. */
+  private def ensureLayout(s: SparkSession, dir: String, layout: Artifact)(
+      build: String => Unit): String = {
+    val path = layout.ensure(s, dir)(build)
+    sweepLegacyLayouts(s, path.substring(0, path.lastIndexOf('/')))
+    path
   }
 
   /** Idempotent build: writes the [[buildIvfIndex]] layout for `dir`
-    * at [[ivfIndexPath]] unless a completed index (_SUCCESS marker) is
-    * already there. Call once in job setup; queries then stay pure
-    * readers. */
-  def ensureIvfIndex(s: SparkSession, dir: String, nlist: Int = 32): String = {
-    // resolve the generation dir ONCE (it embeds a contentStamp file
-    // walk of the corpus table — threading it through the sweeps
-    // keeps ensure at one walk, not three)
-    val gen = ivfStampDir(s, dir)
-    val path = s"$gen/${mainIvfLeaf(nlist)}"
-    Artifacts.sweepSuperseded(s, gen, "st")
-    sweepLegacyLayouts(s, gen)
-    Artifacts.ensure(s, path)(buildIvfIndex(s, dir, path, nlist))
-  }
+    * unless a completed index is already there. Registry entries call
+    * it while they build their DataFrame; the read itself stays a pure
+    * parquet scan. */
+  def ensureIvfIndex(s: SparkSession, dir: String, nlist: Int = 32): String =
+    ensureLayout(s, dir, seededIvf("main", nlist))(
+      buildIvfIndex(s, dir, _, nlist))
 
   /** Delete SUPERSEDED-FORMAT layout entries inside the live
     * generation dir. The stamp-level sweep only matches sibling
@@ -556,11 +553,11 @@ object Similarity {
     * the label column), so deletion is the only correct disposition;
     * one marker-or-tree delete per name pattern, driver-side, once
     * per ensure. Assumes a SINGLE-VERSION fleet per warehouse
-    * (stated, not hidden — the [[Artifacts.ensure]] contract): an
+    * (stated, not hidden — the [[Artifact.ensure]] contract): an
     * r18 binary sharing this warehouse mid-upgrade would see its
     * layout deleted under a running query and rebuild it; a
     * deployment upgrading a shared warehouse drains old-binary
-    * readers first, exactly as the [[Artifacts.dirTag]] migration
+    * readers first, exactly as the [[Artifact]] migration
     * note prescribes for address-scheme changes. Entries of a NEWER
     * format than this binary's are never touched. */
   private def sweepLegacyLayouts(s: SparkSession, gen: String): Unit = {
@@ -587,26 +584,6 @@ object Similarity {
     }
   }
 
-  /** Deterministic address of the TRAINED-codebook index layout under
-    * the same embeddings-stamped generation dir as the seeded
-    * layouts. EVERY semantic input is in the address (the
-    * [[codebookPath]] rule): nlist and iters because an index
-    * assigned by a differently-trained codebook is a different
-    * index, and BOTH format versions — the layout's own
-    * ([[ivfFormatVersion]]) and the codebook's
-    * ([[codebookVersion]]): a codebook format bump retrains the
-    * centroids, and a trained layout whose cells were assigned by
-    * the OLD centroids must not be served against routing that uses
-    * the new ones (the r19 self-review find). */
-  def trainedIvfIndexPath(s: SparkSession, dir: String, nlist: Int = 32,
-      iters: Int = 2): String =
-    s"${ivfStampDir(s, dir)}/${trainedIvfLeaf(nlist, iters)}"
-
-  /** ONE definition of the trained layout's leaf name — shared by the
-    * address and the ensure so the two cannot drift. */
-  private def trainedIvfLeaf(nlist: Int, iters: Int): String =
-    s"trained_${ivfFormatVersion}_cb${codebookVersion}_nl${nlist}_it$iters"
-
   /** Idempotent build of the trained-codebook index layout (the s33
     * half of the production stack): the SAME [[buildIvfIndexWith]]
     * body as the seeded index, assigned against the PERSISTED
@@ -619,17 +596,9 @@ object Similarity {
   def ensureTrainedIvfIndex(s: SparkSession, dir: String,
       nlist: Int = 32, iters: Int = 2): String = {
     require(nlist >= 1 && iters >= 1)
-    val gen = ivfStampDir(s, dir)
-    val path = s"$gen/${trainedIvfLeaf(nlist, iters)}"
-    Artifacts.sweepSuperseded(s, gen, "st")
-    sweepLegacyLayouts(s, gen)
-    Artifacts.ensure(s, path)(buildIvfIndexWith(s, dir, path,
-      trainedFineCodebook(s, dir, nlist, iters)))
+    ensureLayout(s, dir, trainedIvf(nlist, iters))(
+      buildIvfIndexWith(s, dir, _, trainedFineCodebook(s, dir, nlist, iters)))
   }
-
-  private def trainedCompactPath(s: SparkSession, dir: String,
-      nlist: Int, iters: Int): String =
-    s"${ivfStampDir(s, dir)}/${trainedIvfLeaf(nlist, iters)}_compact"
 
   /** [[ensureCompactedIvfIndex]] for the TRAINED family — the same
     * compaction body (one anti-join of the SAME [[tombstoneSet]] +
@@ -641,25 +610,23 @@ object Similarity {
     * symmetric across both index families. */
   def ensureCompactedTrainedIvfIndex(s: SparkSession, dir: String,
       nlist: Int = 32, iters: Int = 2): String =
-    ensureCompactedAt(s, dir,
-      ensureTrainedIvfIndex(s, dir, nlist, iters),
-      trainedCompactPath(s, dir, nlist, iters),
+    ensureCompactedAt(s, dir, ensureTrainedIvfIndex(s, dir, nlist, iters),
+      trainedIvf(nlist, iters, "_compact"),
       trainedEpochMarker(s, dir, nlist, iters))
 
   /** The compact-then-flip body — ONE definition for both index
-    * families, parameterized by the (live ensure, compact path,
+    * families, parameterized by the (live ensure, compacted layout,
     * marker) triple that IS a family, the same way [[epochOf]] /
     * [[writeEpochMarker]] already share the pointer primitives: a
     * lifecycle-policy change (e.g. a flip-failure protocol, a third
     * layout family) lands here once or not at all. */
   private def ensureCompactedAt(s: SparkSession, dir: String,
-      livePath: => String, compactPath: String,
+      livePath: => String, compact: Artifact,
       marker: org.apache.hadoop.fs.Path): String = {
-    Artifacts.ensure(s, compactPath)(
-      compactIvfIndex(s, dir, livePath, compactPath))
+    val path = compact.ensure(s, dir)(compactIvfIndex(s, dir, livePath, _))
     if (epochOf(s, marker) != "compact")
       writeEpochMarker(s, marker, "compact")
-    compactPath
+    path
   }
 
   /** The fresh-ingest BUFFER — vectors (re-)ingested since the last
@@ -716,7 +683,7 @@ object Similarity {
   def ensureCompactedIvfIndex(s: SparkSession, dir: String,
       nlist: Int = 32): String =
     ensureCompactedAt(s, dir, ensureIvfIndex(s, dir, nlist),
-      ivfCompactPath(s, dir, nlist), ivfEpochMarker(s, dir, nlist))
+      seededIvf("compact", nlist), ivfEpochMarker(s, dir, nlist))
 
   /** The index EPOCH pointer — the LSM-manifest CURRENT idiom for
     * the s26/s27 lifecycle: a tiny file under the generation's stamp
@@ -757,13 +724,12 @@ object Similarity {
   }
 
   private def ivfEpochMarker(s: SparkSession, dir: String, nlist: Int) =
-    new org.apache.hadoop.fs.Path(
-      s"${ivfStampDir(s, dir)}/CURRENT_${ivfFormatVersion}_nl$nlist")
+    new org.apache.hadoop.fs.Path(seededIvf("CURRENT", nlist).path(s, dir))
 
   private def trainedEpochMarker(s: SparkSession, dir: String,
       nlist: Int, iters: Int) =
     new org.apache.hadoop.fs.Path(
-      s"${ivfStampDir(s, dir)}/${trainedIvfLeaf(nlist, iters)}_CURRENT")
+      trainedIvf(nlist, iters, "_CURRENT").path(s, dir))
 
   private def writeEpochMarker(s: SparkSession,
       marker: org.apache.hadoop.fs.Path, epoch: String): Unit = {
@@ -978,30 +944,18 @@ object Similarity {
     * six consumers' retraining oracles diverge. */
   val codebookVersion = "v1"
 
-  /** Deterministic per-corpus address of the persisted trained
-    * codebook — every training hyperparameter (nlist, iters) plus
-    * the embeddings table's content stamp in the path (the
-    * [[graft.ops.TextAnalysis.qualityModelPath]] contract): a
-    * codebook trained at different settings or on a re-derived
-    * corpus is a DIFFERENT codebook, and a pure `(spark, dir)` query
-    * must be able to find the right one from the corpus dir alone. */
-  def codebookPath(s: SparkSession, dir: String, nlist: Int,
-      iters: Int): String = {
-    val stamp = Artifacts.contentStamp(s, dir, "embeddings")
-    s"${s.conf.get("spark.sql.warehouse.dir")}/graft_codebook/" +
-      s"$codebookVersion/${Artifacts.dirTag(dir)}/" +
-      s"nl${nlist}_it${iters}_st$stamp"
-  }
-
   /** Idempotent train-once for the k-means codebook — the r18
     * verdict's missing artifact: [[trainedCentroids]] was memoized
     * per SESSION, so every new driver retrained (a full Lloyd corpus
     * pass × iters) before any trained-IVF query could run; at 100 TB
     * that is the restart cost [[graft.ops.TextAnalysis
     * .ensureQualityModel]] already retired for the classifier. Same
-    * discipline: _SUCCESS-guarded build at [[codebookPath]],
-    * superseded corpus GENERATIONS swept (stamp level), superseded
-    * FORMAT VERSIONS swept with one-predecessor retention. The
+    * [[Artifact]] discipline: every training hyperparameter (nlist,
+    * iters), the format version and the embeddings content stamp in
+    * the address (a codebook trained at different settings or on a
+    * re-derived corpus is a DIFFERENT codebook), superseded corpus
+    * generations and format versions swept with one-predecessor
+    * retention. The
     * persisted frame is the melted (cell, dim, cval) codebook at
     * FULL double precision — parquet round-trips IEEE-754 doubles
     * bit-exactly, so a served codebook is bit-identical to a freshly
@@ -1012,17 +966,12 @@ object Similarity {
       iters: Int = 2): String = {
     // the guard the session memo used to enforce at its single entry
     // point — here at the ARTIFACT boundary, because a degenerate
-    // nl0/it0 tree persisted under a _SUCCESS marker would be served
+    // nl0/it0 tree persisted under a completion marker would be served
     // forever (the r19 self-review find)
     require(nlist >= 1 && iters >= 1)
-    val path = codebookPath(s, dir, nlist, iters)
-    Artifacts.sweepSuperseded(s, path, s"nl${nlist}_it${iters}_st")
-    Artifacts.sweepSuperseded(s,
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_codebook/" +
-        codebookVersion, "v")
-    Artifacts.ensure(s, path)(
-      trainCodebookFrame(s, dir, nlist, iters)
-        .write.mode("overwrite").parquet(path))
+    Artifact("graft_codebook", Some(codebookVersion), "embeddings",
+      s"/nl${nlist}_it${iters}_").ensure(s, dir)(
+      trainCodebookFrame(s, dir, nlist, iters).write.mode("overwrite").parquet(_))
   }
 
   /** The ONE definition of the per-cell pairwise-cosine arithmetic
@@ -1235,21 +1184,10 @@ object Similarity {
      trainedCodebookRow(s, dir, nl, iters))
   }
 
-  /** Deterministic per-(corpus, nlist, iters) location for the
-    * persisted semantic index — [[ivfIndexPath]]'s addressing rule
-    * applied to the TRAINED member/codebook pair, so a pure
-    * `(spark, dir)` query can find its index. */
-  def semanticIndexPath(s: SparkSession, dir: String,
-      nlist: Int, iters: Int): String = {
-    val stamp = Artifacts.contentStamp(s, dir, "embeddings")
-    s"${s.conf.get("spark.sql.warehouse.dir")}/graft_semantic_index/" +
-      s"${Artifacts.dirTag(dir)}_nl${nlist}_it${iters}_st$stamp"
-  }
-
   /** Idempotent write-once build of [[semanticIndex]]: the member
     * table partitioned by trained cell under `<root>/members`, the
     * one-row codebook under `<root>/codebook` — written LAST, so its
-    * _SUCCESS marker certifies the PAIR is complete (a crash between
+    * completion marker certifies the PAIR is complete (a crash between
     * the two writes leaves no marker and the next call rebuilds).
     * Probe-side jobs ([[graft.ops.Dedup.incrementalSemanticNearDups]],
     * and the static side of
@@ -1262,17 +1200,12 @@ object Similarity {
   def ensureSemanticIndex(s: SparkSession, dir: String, nlist: Int = 0,
       iters: Int = 2): String = {
     val nl = graft.ops.Dedup.resolvedNlist(s, nlist)
-    val root = semanticIndexPath(s, dir, nl, iters)
-    Artifacts.sweepSuperseded(s, root,
-      s"${Artifacts.dirTag(dir)}_nl${nl}_it${iters}_st")
-    val marker = new org.apache.hadoop.fs.Path(s"$root/codebook/_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    Artifact("graft_semantic_index", None, "embeddings",
+      s"_nl${nl}_it${iters}_", lastPart = Some("codebook")).ensure(s, dir) { root =>
       val (index, cb) = semanticIndex(s, dir, nl, iters)
       writePartitionedByCell(index, s"$root/members")
       cb.write.mode("overwrite").parquet(s"$root/codebook")
     }
-    root
   }
 
   /** Pure-reader side of [[ensureSemanticIndex]]: the (members,

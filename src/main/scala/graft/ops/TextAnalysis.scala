@@ -843,12 +843,12 @@ object TextAnalysis {
     * corpus content stamp (an in-place re-derivation must retrain,
     * not serve counts learned from data that no longer exists). */
   def bigramLmPath(s: SparkSession, dir: String,
-      vocabSizeParam: Int = 0): String = {
-    val vocabSize = lmVocabSize(s, vocabSizeParam)
-    val stamp = Artifacts.contentStamp(s, dir, "documents")
-    s"${s.conf.get("spark.sql.warehouse.dir")}/graft_bigram_lm/" +
-      s"$bigramLmVersion/${Artifacts.dirTag(dir)}/vs${vocabSize}_st$stamp"
-  }
+      vocabSizeParam: Int = 0): String =
+    bigramLm(lmVocabSize(s, vocabSizeParam)).path(s, dir)
+
+  private def bigramLm(vocabSize: Int): Artifact =
+    Artifact("graft_bigram_lm", Some(bigramLmVersion), "documents",
+      s"/vs${vocabSize}_")
 
   /** Idempotent train-once for the bigram LM — the
     * [[ensureQualityModel]] contract: without it every new session
@@ -858,22 +858,13 @@ object TextAnalysis {
     * parquet round-trip is bit-exact — a served score can never
     * drift from a freshly-trained one (OpsSpec pins row equality;
     * t24's oracle retrains in DuckDB against the ARTIFACT-served
-    * datasheet). Superseded corpus generations are swept under the
-    * [[Artifacts.sweepSuperseded]] retention rule. */
+    * datasheet). Superseded corpus generations and format versions
+    * are swept under the [[Artifact.ensure]] retention rule. */
   def ensureBigramLmModel(s: SparkSession, dir: String,
       vocabSizeParam: Int = 0): String = {
     val vocabSize = lmVocabSize(s, vocabSizeParam)
-    val path = bigramLmPath(s, dir, vocabSize)
-    Artifacts.sweepSuperseded(s, path, s"vs${vocabSize}_st")
-    // version-level sweep — the ensureQualityModel bounded-versions
-    // contract, symmetric here so a future bigramLmVersion bump
-    // cannot strand the old tree
-    Artifacts.sweepSuperseded(s,
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_bigram_lm/" +
-        bigramLmVersion, "v")
-    Artifacts.ensure(s, path)(
-      bigramLmModelRow(s, dir, vocabSize)
-        .write.mode("overwrite").parquet(path))
+    bigramLm(vocabSize).ensure(s, dir)(
+      bigramLmModelRow(s, dir, vocabSize).write.mode("overwrite").parquet(_))
   }
 
   /** The persisted bigram LM as a one-row frame — ensure then a plain
@@ -1109,15 +1100,6 @@ object TextAnalysis {
     * exists while four retraining oracles diverge. */
   val bpeModelVersion = "v1"
 
-  /** Deterministic address of the persisted BPE model — rounds +
-    * format version + the documents table's content stamp (the
-    * [[qualityModelPath]] contract). */
-  def bpeModelPath(s: SparkSession, dir: String, rounds: Int): String = {
-    val stamp = Artifacts.contentStamp(s, dir, "documents")
-    s"${s.conf.get("spark.sql.warehouse.dir")}/graft_bpe_model/" +
-      s"$bpeModelVersion/${Artifacts.dirTag(dir)}/r${rounds}_st$stamp"
-  }
-
   /** Idempotent train-once for the BPE tokenizer — the LAST
     * session-scoped trained artifact in the engine, retired with the
     * [[graft.ops.Similarity.ensureCodebook]] discipline (r19): the
@@ -1125,30 +1107,24 @@ object TextAnalysis {
     * consumes (t18 publishes, t19/c20/c22 apply, the streaming BPE
     * gates serve) used to be memoized per session, so each new
     * driver paid `rounds` corpus-vocabulary training passes before
-    * its first encode. Now: _SUCCESS-guarded build at a stamped
-    * address — merges and vocab under one root, the vocab (written
-    * LAST) carrying the marker so a crash between the two writes
-    * leaves no marker and the next call rebuilds (the
-    * `ensureSemanticIndex` pair contract). Both frames are pure
+    * its first encode. Now: an [[Artifact]] at
+    * `graft_bpe_model/v1/<corpus tag>/r<rounds>_st<documents stamp>`
+    * — merges and vocab under one root, the vocab (written LAST)
+    * carrying the marker so a crash between the two writes leaves no
+    * marker and the next call rebuilds (the `ensureSemanticIndex`
+    * pair contract). Both frames are pure
     * strings + longs, so the parquet round-trip is bit-exact, and
     * the four existing retraining oracles (t18/t19/c20/c22) become
     * persisted-vs-retrained certifications on every gate run. */
   def ensureBpeModel(s: SparkSession, dir: String,
       rounds: Int = 6): String = {
     require(rounds >= 1)
-    val root = bpeModelPath(s, dir, rounds)
-    Artifacts.sweepSuperseded(s, root, s"r${rounds}_st")
-    Artifacts.sweepSuperseded(s,
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_bpe_model/" +
-        bpeModelVersion, "v")
-    val marker = new org.apache.hadoop.fs.Path(s"$root/vocab/_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    Artifact("graft_bpe_model", Some(bpeModelVersion), "documents",
+      s"/r${rounds}_", lastPart = Some("vocab")).ensure(s, dir) { root =>
       val (merges, vocab) = trainBpeFrames(s, dir, rounds)
       merges.write.mode("overwrite").parquet(s"$root/merges")
       vocab.write.mode("overwrite").parquet(s"$root/vocab")
     }
-    root
   }
 
   /** The trained-BPE SERVE path shared by [[bpeMerges]] (publishes
@@ -1549,8 +1525,8 @@ object TextAnalysis {
   }
 
   /** Deterministic per-corpus location for the persisted t21 model,
-    * under the session's warehouse dir — the [[graft.ops.Similarity
-    * .ivfIndexPath]] addressing contract: a pure `(spark, dir)`
+    * under the session's warehouse dir — the [[Artifact]]
+    * addressing contract: a pure `(spark, dir)`
     * query can find its artifact from the corpus dir alone. The
     * Gopher bounds are part of the address (a model trained at
     * different bounds is a DIFFERENT model; silently serving it
@@ -1565,16 +1541,16 @@ object TextAnalysis {
     * not serve weights learned from data that no longer exists. */
   val qualityModelVersion = "v2" // v2: top-N vocabulary cap + trained OOV mass
   def qualityModelPath(s: SparkSession, dir: String,
-      minWords: Int = 50, maxWords: Int = 100000): String = {
-    val stamp = Artifacts.contentStamp(s, dir, "documents")
-    val cap = classifierVocabSize(s)
-    s"${s.conf.get("spark.sql.warehouse.dir")}/graft_quality_model/" +
-      s"$qualityModelVersion/${Artifacts.dirTag(dir)}/" +
-      s"mw${minWords}_${maxWords}_cv${cap}_st$stamp"
-  }
+      minWords: Int = 50, maxWords: Int = 100000): String =
+    qualityModel(s, minWords, maxWords).path(s, dir)
+
+  private def qualityModel(s: SparkSession, minWords: Int,
+      maxWords: Int): Artifact =
+    Artifact("graft_quality_model", Some(qualityModelVersion), "documents",
+      s"/mw${minWords}_${maxWords}_cv${classifierVocabSize(s)}_")
 
   /** Idempotent train-once: writes the [[trainQualityModel]] row at
-    * [[qualityModelPath]] unless a completed artifact (_SUCCESS
+    * [[qualityModelPath]] unless a completed artifact (completion
     * marker) is already there — the [[graft.ops.Similarity
     * .ensureIvfIndex]] contract for the classifier. This closes the
     * train-once-serve-forever loop a production gate needs: without
@@ -1587,23 +1563,8 @@ object TextAnalysis {
     * training chain against the ARTIFACT-served scores). */
   def ensureQualityModel(s: SparkSession, dir: String,
       minWords: Int = 50, maxWords: Int = 100000): String = {
-    val path = qualityModelPath(s, dir, minWords, maxWords)
-    // superseded corpus generations are swept, not abandoned: without
-    // this, every in-place re-derivation (new stamp, new dir) leaves
-    // the old model directory behind forever
-    Artifacts.sweepSuperseded(s, path,
-      s"mw${minWords}_${maxWords}_cv${classifierVocabSize(s)}_st")
-    // VERSION-level sweep: a format bump (v1 → v2 at the r18
-    // vocabulary cap) orphans the prior version's whole tree, which
-    // no code path ever visits again — retain one predecessor
-    // version (a lazy reader still on old code), delete older, so
-    // accumulation is bounded at two versions
-    Artifacts.sweepSuperseded(s,
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_quality_model/" +
-        qualityModelVersion, "v")
-    Artifacts.ensure(s, path)(
-      trainQualityModel(s, dir, minWords, maxWords)
-        .write.mode("overwrite").parquet(path))
+    qualityModel(s, minWords, maxWords).ensure(s, dir)(
+      trainQualityModel(s, dir, minWords, maxWords).write.mode("overwrite").parquet(_))
   }
 
   /** The persisted t21 model as a one-row frame — [[ensureQualityModel]]

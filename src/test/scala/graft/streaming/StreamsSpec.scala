@@ -32,6 +32,35 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("intervalBatches: a processing-time trigger hands every row to " +
+    "exactly one batch, in increasing batch ids") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-interval-ck").toString
+    val mem = MemoryStream[Long]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]
+    val q = Streams.intervalBatches(mem.toDF(), intervalMs = 50, ckpt) { (df, id) =>
+      val ids = df.as[Long].collect().toSeq
+      if (ids.nonEmpty) seen.add(id -> ids)
+    }
+    try {
+      mem.addData(1L to 40L)
+      q.processAllAvailable()
+      mem.addData(41L to 70L)
+      q.processAllAvailable()
+      mem.addData(71L to 100L)
+      q.processAllAvailable()
+    } finally q.stop()
+    val batches = seen.toArray(Array.empty[(Long, Seq[Long])]).toSeq
+    assert(batches.size >= 3, s"one batch per addData at least: $batches")
+    val ids = batches.map(_._1)
+    assert(ids.zip(ids.tail).forall { case (a, b) => a < b },
+      s"batch ids must increase: $ids")
+    assert(batches.flatMap(_._2).sorted == (1L to 100L),
+      "every row must arrive exactly once")
+  }
+
   test("ohlcStream: late in-watermark events repair open/close; stream ≡ batch") {
     val s = spark
     import s.implicits._

@@ -6,7 +6,9 @@ Usage: python3 tools/compare.py /tmp/verify_out /root/testdata/sf0.01
 For each query result parquet under outDir, runs the matching oracle
 SQL (outDir/oracle_sql.json) in DuckDB against the sf parquet tables,
 sorts columns by name and rows by value, and compares cell-by-cell
-(floats to 1e-9 relative, everything else exact).
+(floats to 1e-9 relative, everything else exact). An oracle entry with
+no result directory (its query threw before writing) is MISSING, a
+fail. Exits 1 on any fail.
 """
 import json, math, sys
 from pathlib import Path
@@ -34,7 +36,8 @@ def main(out_dir, sf_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     ok = fail = skip = 0
-    for qdir in sorted(p for p in out.iterdir() if p.is_dir()):
+    qdirs = sorted(p for p in out.iterdir() if p.is_dir())
+    for qdir in qdirs:
         name = qdir.name
         files = list(qdir.glob("*.parquet"))
         if not files:
@@ -75,6 +78,9 @@ def main(out_dir, sf_dir):
         else:
             print(f"OK       {name} ({len(srows)} rows)")
             ok += 1
+    for name in sorted(set(oracle) - {p.name for p in qdirs}):
+        print(f"MISSING  {name} (no result directory)")
+        fail += 1
     print(f"\n{ok} ok, {fail} fail, {skip} rows-only")
     return 1 if fail else 0
 
