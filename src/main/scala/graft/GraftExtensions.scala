@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.Kernels
+import graft.ops.InPlaceSortStrategy
 import graft.stream.PartitionPreviewStrategy
 
 /** Session-extension hook: registers the engine's native expressions
@@ -19,10 +20,12 @@ import graft.stream.PartitionPreviewStrategy
   * callers get a positioned analysis error, not a raw
   * IllegalArgumentException escaping function resolution.
   *
-  * It also injects the planner strategy of the ordered family's
-  * [[graft.stream.PartitionPreview]] node. The code that builds that
-  * node installs the same strategy itself, so sessions without the
-  * extension plan it too.
+  * It also injects two planner strategies: the one of the ordered
+  * family's [[graft.stream.PartitionPreview]] node, and
+  * [[graft.ops.InPlaceSortStrategy]], which sorts a small materialized
+  * input in one task. The code that builds the node, and the table
+  * reader, install the same strategies themselves, so sessions without
+  * the extension plan with them too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -33,6 +36,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         k.build))
     }
     ext.injectPlannerStrategy(_ => PartitionPreviewStrategy)
+    ext.injectPlannerStrategy(_ => InPlaceSortStrategy)
   }
 }
 

@@ -101,8 +101,13 @@ private[graft] object Artifacts {
     * has the same silent-zero failure on non-local paths). A missing
     * table raises (an artifact address for data that doesn't exist
     * is a caller bug, not a cache miss). */
-  def contentStamp(s: SparkSession, dir: String, table: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, s"$table.parquet")
+  def contentStamp(s: SparkSession, dir: String, table: String): String =
+    contentStamp(s, new org.apache.hadoop.fs.Path(dir, s"$table.parquet").toString)
+
+  /** [[contentStamp]] of a table at a full path (a file or a directory
+    * of data files). */
+  def contentStamp(s: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val status = fs.getFileStatus(p) // raises on a missing table
     if (status.isFile) s"${status.getModificationTime}-${status.getLen}"
@@ -110,14 +115,19 @@ private[graft] object Artifacts {
       // RECURSIVE file walk: a partitionBy-written table keeps its
       // data files under key= subdirectories — a top-level listing
       // would see only _SUCCESS and degrade the byte-total tie-break
-      // to a constant exactly for partitioned sources
-      val it = fs.listFiles(p, true)
+      // to a constant exactly for partitioned sources. listStatus, not
+      // listFiles: the LocatedFileStatus listFiles builds copies each
+      // file's permissions, which the local file system without the
+      // native Hadoop library reads by forking `ls` once per file
       var maxM = 0L; var totLen = 0L; var n = 0
-      while (it.hasNext) {
-        val f = it.next()
-        maxM = math.max(maxM, f.getModificationTime)
-        totLen += f.getLen; n += 1
+      def walk(d: org.apache.hadoop.fs.Path): Unit = fs.listStatus(d).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else {
+          maxM = math.max(maxM, f.getModificationTime)
+          totLen += f.getLen; n += 1
+        }
       }
+      walk(p)
       // explicit sentinel, NOT the directory's own mtime (the exact
       // dir-level signal this stamp exists to avoid — synthetic on
       // object stores): any two empty generations have identical

@@ -17,7 +17,7 @@ import graft.stream.Ordered
 object Relational {
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.read(s, s"$dir/$name.parquet")
 
   /** events.parquet has shipped `ts` in two physical encodings across
     * testdata generations: TIMESTAMP(NANOS) (readable only with

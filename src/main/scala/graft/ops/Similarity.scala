@@ -303,10 +303,10 @@ object Similarity {
       val (index, tombstoned) = layout match {
         case Inline => (seededAssign(emb.select(col("vec_id").as("c_id"),
           col("embedding").as("c_emb")), fine), tombstones)
-        case At(path) => (s.read.parquet(path), tombstones)
+        case At(path) => (Tables.read(s, path), tombstones)
         case Current =>
           val (path, live) = currentLayout(s, dir)
-          (s.read.parquet(path), live)
+          (Tables.read(s, path), live)
       }
       val candidates = filter.fold(index)(index.filter)
         .join(broadcast(probes), "cell")
@@ -666,7 +666,7 @@ object Similarity {
   def compactIvfIndex(s: SparkSession, dir: String, indexPath: String,
       outPath: String): Unit =
     writePartitionedByCell(
-      s.read.parquet(indexPath)
+      Tables.read(s, indexPath)
         .join(broadcast(tombstoneSet(s, dir)), Seq("c_id"), "left_anti"),
       outPath)
 
@@ -1066,7 +1066,7 @@ object Similarity {
   private[ops] def trainedCentroids(s: SparkSession, dir: String,
       nlist: Int, iters: Int): (DataFrame, DataFrame) = {
     require(nlist >= 1 && iters >= 1)
-    val trained = s.read.parquet(ensureCodebook(s, dir, nlist, iters))
+    val trained = Tables.read(s, ensureCodebook(s, dir, nlist, iters))
     (trained, assignAgainstCodebook(t(s, dir, "embeddings"), trained))
   }
 
@@ -1128,7 +1128,7 @@ object Similarity {
     * corpus untouched beyond the ensure-guarded training pass. */
   def codebookDatasheet(s: SparkSession, dir: String, nlist: Int = 32,
       iters: Int = 2): DataFrame =
-    s.read.parquet(ensureCodebook(s, dir, nlist, iters))
+    Tables.read(s, ensureCodebook(s, dir, nlist, iters))
       .select(col("cell"), col("dim"),
         floor(col("cval") * lit(1e4) + lit(0.5)).cast("long").as("cv4"))
       .agg(countDistinct(col("cell")).as("cells"),
@@ -1216,9 +1216,9 @@ object Similarity {
     * round-trip parquet exactly, so results are hash-identical to the
     * in-memory [[semanticIndex]] frames. */
   def readSemanticIndex(s: SparkSession, root: String): (DataFrame, DataFrame) =
-    (s.read.parquet(s"$root/members")
+    (Tables.read(s, s"$root/members")
        .withColumn("cell", col("cell").cast("long")),
-     s.read.parquet(s"$root/codebook"))
+     Tables.read(s, s"$root/codebook"))
 
   /** Cell-bounded k-NN graph (s13): for every corpus vector, its
     * top-`k` most-similar neighbors WITHIN its own trained IVF cell —

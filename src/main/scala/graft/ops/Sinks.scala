@@ -48,7 +48,7 @@ object Sinks {
     }
     require(qualified(inDir) != qualified(outDir),
       s"compactParquet: outDir must differ from inDir ($inDir)")
-    val df = s.read.parquet(inDir)
+    val df = Tables.read(s, inDir)
     val nFiles = math.max(1,
       math.ceil(inputBytes(s, inDir).toDouble / targetFileBytes).toInt)
     val out =

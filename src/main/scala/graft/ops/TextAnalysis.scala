@@ -874,7 +874,7 @@ object TextAnalysis {
     * static side with no checkpoint ceremony). */
   def readBigramLmModel(s: SparkSession, dir: String,
       vocabSizeParam: Int = 0): DataFrame =
-    s.read.parquet(ensureBigramLmModel(s, dir, vocabSizeParam))
+    Tables.read(s, ensureBigramLmModel(s, dir, vocabSizeParam))
 
   /** Bigram-LM artifact datasheet (t24) — the t22 pattern for the
     * OTHER trained model: the persisted LM described as data
@@ -1138,8 +1138,8 @@ object TextAnalysis {
   private[ops] def bpeTrain(s: SparkSession, dir: String,
       rounds: Int): (DataFrame, DataFrame) = {
     val root = ensureBpeModel(s, dir, rounds)
-    (s.read.parquet(s"$root/merges").orderBy("merge_round"),
-      s.read.parquet(s"$root/vocab"))
+    (Tables.read(s, s"$root/merges").orderBy("merge_round"),
+      Tables.read(s, s"$root/vocab"))
   }
 
   /** The BPE TRAINING pass — [[ensureBpeModel]]'s build lambda,
@@ -1574,7 +1574,7 @@ object TextAnalysis {
     * streaming static side). */
   def readQualityModel(s: SparkSession, dir: String,
       minWords: Int = 50, maxWords: Int = 100000): DataFrame =
-    s.read.parquet(ensureQualityModel(s, dir, minWords, maxWords))
+    Tables.read(s, ensureQualityModel(s, dir, minWords, maxWords))
 
   /** Model-artifact datasheet (t22): the persisted classifier
     * described as data — vocabulary size, OOV weight, class prior,

@@ -172,13 +172,18 @@ case class PartitionPreviewExec(
   * that builds the node ([[install]], as Pathling's
   * `SqlStrategy.setup`), and registered through
   * [[graft.GraftExtensions]] for sessions built with the extension. */
-object PartitionPreviewStrategy extends SparkStrategy {
+object PartitionPreviewStrategy extends SessionStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PartitionPreview(ordering, key, index, child) =>
       PartitionPreviewExec(ordering, key, index, planLater(child)) :: Nil
     case _ => Nil
   }
+}
 
+/** A planner strategy that the code depending on it installs into the
+  * session itself, so sessions built without [[graft.GraftExtensions]]
+  * plan with it too. */
+trait SessionStrategy extends SparkStrategy {
   /** Idempotent: adds this strategy to the session's extra strategies
     * once. */
   def install(spark: SparkSession): Unit = {

@@ -146,4 +146,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(sql == api && sql.size == 64)
   }
+
+  test("the extension injects both planner strategies") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    // buildPlannerStrategies is private[sql]; the planner calls it
+    val built = ext.getClass
+      .getMethod("buildPlannerStrategies", classOf[org.apache.spark.sql.SparkSession])
+      .invoke(ext, SparkSpec.session).asInstanceOf[Seq[AnyRef]]
+    assert(built.contains(graft.stream.PartitionPreviewStrategy))
+    assert(built.contains(graft.ops.InPlaceSortStrategy))
+  }
 }

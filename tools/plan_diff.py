@@ -5,9 +5,20 @@ A formatted plan carries numbers that change from run to run and from
 one source tree to another without any change in the plan: expression
 IDs (`c_id#1257L`), plan-node IDs (`Project (37)`, `operator id: 12`),
 whole-stage codegen stage numbers (`[codegen id : 3]`), exchange plan
-IDs (`[plan_id=88]`), lambda variable suffixes (`lambda x_52`) and the
-warehouse root the artifacts live under.
+IDs (`[plan_id=88]`), lambda variable suffixes (`lambda x_52`), the
+warehouse root the artifacts live under, the JVM lambda object a typed
+operator prints (`Dedup$$$Lambda$5876/0x00007fa26d695a50@6dcf7c49`),
+and the RDD id and source line in a `Scan ExistingRDD` argument
+(`MapPartitionsRDD[459] at localCheckpoint at Curation.scala:1171`).
 This tool rewrites each of them to a fixed token and diffs the rest.
+
+Catalyst's distinct-aggregate rewrite also numbers its groups in an
+order that follows expression hash codes, so the same query can put
+`[dim, cell]` or `[cell, dim]` into its `Expand` and the aggregates
+above it. Before the IDs are rewritten, each such `Expand` (the one
+with a `gid` column) is put into one canonical order: the distinct
+columns sorted by name, the groups renumbered in that order, and every
+list and `gid = k` filter that names them rewritten to match.
 
 Usage:
     tools/plan_diff.py BEFORE.txt AFTER.txt
@@ -38,10 +49,79 @@ _RULES = [
     (re.compile(r"lambda (\w+?)_\d+"), r"lambda \1_N"),
     # each dump runs in its own warehouse
     (re.compile(r"file:[^\s\],]*?/spark-warehouse"), "<warehouse>"),
+    # a typed operator prints its JVM lambda object (class counter,
+    # hidden-class address, identity hash)
+    (re.compile(r"\$\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+"), "$$Lambda"),
+    # a localCheckpoint'ed frame prints its RDD id and its source line
+    (re.compile(r"(\w+RDD)\[\d+\] at (\w+) at ([\w$]+\.scala):\d+"),
+     r"\1[N] at \2 at \3:N"),
 ]
+
+_EXPAND = re.compile(r"^Arguments: \[(\[.*\])\], \[([^\[\]]*\bgid#\d+[^\[\]]*)\]$",
+                     re.M)
+
+
+def _split(items):
+    """Split a comma list at bracket depth 0."""
+    out, depth, cur = [], 0, ""
+    for ch in items:
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        if ch == "," and depth == 0:
+            out.append(cur.strip())
+            cur = ""
+        else:
+            cur += ch
+    if cur.strip():
+        out.append(cur.strip())
+    return out
+
+
+def _bare(attr):
+    return re.sub(r"#\d+L?$", "", attr)
+
+
+def _canonical_distinct(text):
+    """Put each distinct-aggregate Expand into one group order."""
+    for gid in re.findall(r"^Arguments: \[\[.*\b(gid#\d+)\b[^\[\]]*\]$", text, re.M):
+        m = next(m for m in _EXPAND.finditer(text) if gid in _split(m.group(2)))
+        projections = [_split(p[1:-1]) for p in _split(m.group(1))]
+        output = _split(m.group(2))
+        g = output.index(gid)
+        # distinct columns: before gid and null in some projection (the
+        # group-by keys are set in every one)
+        cols = [i for i in range(g)
+                if any(p[i] == "null" for p in projections)]
+        order = sorted(cols, key=lambda i: _bare(output[i]))
+        if order == cols:
+            continue
+        perm = list(range(len(output)))
+        for slot, i in zip(cols, order):
+            perm[slot] = i
+        groups = sorted((p for p in projections if p[g] != "0"),
+                        key=lambda p: [_bare(output[i]) for i in order
+                                       if p[i] != "null"])
+        renumber = {p[g]: str(k + 1) for k, p in enumerate(groups)}
+        rows = [p for p in projections if p[g] == "0"] + groups
+        rows = [[renumber.get(p[g], p[g]) if i == g else p[i] for i in perm]
+                for p in rows]
+        new_out = [output[i] for i in perm]
+        line = "Arguments: [%s], [%s]" % (
+            ", ".join("[%s]" % ", ".join(r) for r in rows), ", ".join(new_out))
+        text = text[:m.start()] + line + text[m.end():]
+        old_run = ", ".join(output[i] for i in cols)
+        new_run = ", ".join(output[i] for i in order)
+        text = text.replace(old_run, new_run)
+        text = re.sub(r"\b%s = (\d+)" % re.escape(gid),
+                      lambda k: "%s = %s" % (gid, renumber.get(k.group(1), k.group(1))),
+                      text)
+    return text
 
 
 def normalize(text):
+    text = _canonical_distinct(text)
     for rx, repl in _RULES:
         text = rx.sub(repl, text)
     return text
