@@ -48,6 +48,11 @@ private[graft] object Kernels {
         arity("cosine_similarity(a, b)", 2, exprs)
         CosineSimilarityExpr(exprs(0), exprs(1))
       }),
+    KernelDef("nearest_cell", classOf[NearestCellExpr],
+      { exprs =>
+        arity("nearest_cell(cents, emb)", 2, exprs)
+        NearestCellExpr(exprs(0), exprs(1))
+      }),
     KernelDef("hyperplane_buckets", classOf[HyperplaneBucketsExpr],
       { exprs =>
         arity("hyperplane_buckets(emb, bits, tables)", 3, exprs)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Relational.{t, r4}
@@ -478,10 +478,21 @@ object Similarity {
     * the layout. Repartitioned, the file count is exactly the cell
     * count, independent of the writing job's parallelism; a big
     * cell's single file stays row-group-splittable, so hot cells
-    * still read in parallel at 100 TB. */
+    * still read in parallel at 100 TB.
+    *
+    * The shuffle is given the session's shuffle width explicitly (the
+    * width `repartition(col)` asks for). An exchange with a partition
+    * count is one AQE does not coalesce; without it AQE merges
+    * partitions by bytes and a small index (1.5 MB, 32 cells) is
+    * written by ONE task that creates every cell file in turn. A
+    * partitioned write costs per file, not per byte — a create, a
+    * permission set and a commit rename on a local file system,
+    * store round trips on a cluster — so the files are spread over
+    * `min(cells, shuffle partitions)` tasks. Each cell still hashes
+    * to exactly one task, so the one-file-per-cell contract holds. */
   private[graft] def writePartitionedByCell(df: DataFrame,
       path: String): Unit =
-    df.repartition(col("cell"))
+    df.repartition(GraftBridge.shufflePartitions(df.sparkSession), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
   /** IVF layout FORMAT VERSION — part of every layout address (the
@@ -1165,10 +1176,12 @@ object Similarity {
     * max picking highest sim then lowest cell (the oracle's
     * row_number tie contract). ONE definition shared by the batch
     * assignment and the streaming probe so the two can never
-    * desynchronize. */
+    * desynchronize. It is the native `nearest_cell` kernel
+    * ([[graft.functions.NearestCellExpr]]), equal for every input to
+    * the interpreted `array_max(transform(cents, c => struct(
+    * r4(cosine(emb, c.cemb)) AS s, -c.cell AS nc)))` it replaced. */
   def bestCellStruct(cents: Column, emb: Column): Column =
-    array_max(transform(cents, c =>
-      struct(r4(cosine(emb, c("cemb"))).as("s"), (-c("cell")).as("nc"))))
+    graft.functions.NearestCell(cents, emb)
 
   /** The static side of the streaming semantic near-dup gate: the
     * trained per-cell member index (cell, match_id, emb_a) plus the

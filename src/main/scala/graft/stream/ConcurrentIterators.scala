@@ -1,6 +1,7 @@
 package graft.stream
 
-import java.util.concurrent.{ArrayBlockingQueue, Executors, TimeUnit}
+import java.util.concurrent.{ArrayBlockingQueue, ExecutorService, Executors}
+import org.apache.spark.TaskContext
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.util.{Failure, Success, Try}
@@ -17,6 +18,14 @@ import scala.util.{Failure, Success, Try}
   * At cluster scale this runs once per task; partition parallelism
   * supplies the `via="process"` axis, this supplies the I/O-bound
   * per-element axis (e.g. an enrichment HTTP call per row).
+  *
+  * The thread pool lives as long as the task, not as long as the
+  * consumer keeps reading: it is shut down when the iterator drains,
+  * and, inside a Spark task, from a task-completion listener — so a
+  * consumer that stops early (`truncate`, `limit`, `take`) or a task
+  * that fails does not leave `concurrency` threads behind. This is
+  * the reference's context-managed executor (iterators.py:489-618).
+  * Outside a task, a consumer that stops early calls [[close]].
   */
 final class ConcurrentMapIterator[T, U](
     upstream: Iterator[T],
@@ -28,9 +37,23 @@ final class ConcurrentMapIterator[T, U](
 
   private var started = false
   private var closed = false
-  private lazy val pool = Executors.newFixedThreadPool(
-    concurrency,
-    r => { val t = new Thread(r, "graft-cmap"); t.setDaemon(true); t })
+  private var threads: ExecutorService = null
+  Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+
+  private def pool: ExecutorService = synchronized {
+    if (threads == null) threads = Executors.newFixedThreadPool(
+      concurrency,
+      r => { val t = new Thread(r, "graft-cmap"); t.setDaemon(true); t })
+    threads
+  }
+
+  /** Stops the pool, interrupting work still in flight; idempotent. */
+  def close(): Unit = synchronized {
+    if (!closed) {
+      closed = true
+      if (threads != null) threads.shutdownNow()
+    }
+  }
 
   // ordered: FIFO queue of futures. unordered: completion queue.
   private val fifo = new java.util.ArrayDeque[java.util.concurrent.Future[Try[U]]]()
@@ -57,7 +80,7 @@ final class ConcurrentMapIterator[T, U](
   override def hasNext: Boolean = {
     if (!started) fill()
     val more = if (ordered) !fifo.isEmpty else inFlight > 0
-    if (!more && !closed) { pool.shutdown(); closed = true }
+    if (!more) close()
     more
   }
 

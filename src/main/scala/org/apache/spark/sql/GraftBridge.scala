@@ -28,6 +28,12 @@ object GraftBridge {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
+  /** The width `repartition(cols)` gives a shuffle in this session:
+    * `spark.sql.shuffle.partitions`, or AQE's initial partition
+    * number when one is set. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
   /** A positioned analysis error for function-builder validation
     * (arity / literal-ness checks in [[graft.GraftExtensions]]): SQL
     * callers get an `AnalysisException` with query context instead of

@@ -283,6 +283,12 @@ class FunctionsSpec extends SparkSpec {
       GraftBridge.expression(c)
     val sampleArgs: Map[String, Seq[Expression]] = Map(
       "cosine_similarity" -> Seq(e(col("emb")), e(col("emb"))),
+      // a two-centroid codebook built per row, so the argmax is data-
+      // dependent and lands in the WholeStageCodegen template
+      "nearest_cell" -> Seq(
+        e(array(struct(lit(0L).as("cell"), col("emb").as("cemb")),
+          struct((col("id") % 3).as("cell"), reverse(col("emb")).as("cemb")))),
+        e(col("emb"))),
       "hyperplane_buckets" -> Seq(e(col("emb")), Literal(4), Literal(2)),
       "minhash_sig" -> Seq(e(col("hs")), Literal(4)),
       "simhash" -> Seq(e(col("hs"))),
