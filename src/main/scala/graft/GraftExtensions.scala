@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.Kernels
-import graft.ops.InPlaceSortStrategy
+import graft.ops.{InPlaceSortStrategy, OneSplitScanStrategy}
 import graft.stream.PartitionPreviewStrategy
 
 /** Session-extension hook: registers the engine's native expressions
@@ -20,12 +20,14 @@ import graft.stream.PartitionPreviewStrategy
   * callers get a positioned analysis error, not a raw
   * IllegalArgumentException escaping function resolution.
   *
-  * It also injects two planner strategies: the one of the ordered
-  * family's [[graft.stream.PartitionPreview]] node, and
+  * It also injects three planner strategies: the one of the ordered
+  * family's [[graft.stream.PartitionPreview]] node,
   * [[graft.ops.InPlaceSortStrategy]], which sorts a small materialized
-  * input in one task. The code that builds the node, and the table
-  * reader, install the same strategies themselves, so sessions without
-  * the extension plan with them too.
+  * input in one task, and [[graft.ops.OneSplitScanStrategy]], which
+  * runs what sits above a one-partition file scan in that scan's task.
+  * The code that builds the node, and the table reader, install the
+  * same strategies themselves, so sessions without the extension plan
+  * with them too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -37,6 +39,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectPlannerStrategy(_ => PartitionPreviewStrategy)
     ext.injectPlannerStrategy(_ => InPlaceSortStrategy)
+    ext.injectPlannerStrategy(_ => OneSplitScanStrategy)
   }
 }
 

@@ -30,10 +30,14 @@ import org.apache.spark.sql.types._
   *    exactly under ANSI mode as `UnaryMinus` is;
   *  - the winner is the `array_max` of `struct(s, nc)` under Spark's
   *    struct ordering: a null `s` sorts below every number, and a tie
-  *    goes to the highest `nc`, i.e. the lowest cell. A null `emb`
-  *    therefore yields `struct(null, -min cell)`, and a null element
+  *    goes to the highest `nc`, i.e. the lowest cell. A null element
   *    of `cents` competes as `struct(null, null)`;
-  *  - a null or empty `cents` gives null.
+  *  - a null or empty `cents` gives null;
+  *  - a null `emb` gives null: a row with no vector has no nearest
+  *    cell. This is where the kernel departs from the higher-order
+  *    form, which scores every centroid null for it and returns
+  *    `struct(null, -min cell)`; the twin is
+  *    `when(emb.isNull, null).otherwise(<the HOF>)`.
   *
   * `cemb` and `emb` may each be float or double arrays; `cell` int or
   * long. The fields are found by their exact names. Any other input
@@ -101,9 +105,12 @@ case class NearestCellExpr(left: Expression, right: Expression,
     val cents = left.eval(input).asInstanceOf[ArrayData]
     if (cents == null || cents.numElements() == 0) null
     else {
-      val (ci, long, ei, ef, n) = layout.get
-      NearestCell.best(cents, n, ci, long, ei, ef,
-        right.eval(input).asInstanceOf[ArrayData], embIsFloat, failOnError)
+      val emb = right.eval(input).asInstanceOf[ArrayData]
+      if (emb == null) null
+      else {
+        val (ci, long, ei, ef, n) = layout.get
+        NearestCell.best(cents, n, ci, long, ei, ef, emb, embIsFloat, failOnError)
+      }
     }
   }
 
@@ -119,9 +126,11 @@ boolean ${ev.isNull} = true;
 $row ${ev.value} = null;
 if (!${c.isNull} && ${c.value}.numElements() > 0) {
   ${e.code}
-  ${ev.value} = $helper.best(${c.value}, $n, $ci, $long, $ei, $ef,
-    ${e.isNull} ? null : ${e.value}, $embIsFloat, $failOnError);
-  ${ev.isNull} = false;
+  if (!${e.isNull}) {
+    ${ev.value} = $helper.best(${c.value}, $n, $ci, $long, $ei, $ef,
+      ${e.value}, $embIsFloat, $failOnError);
+    ${ev.isNull} = false;
+  }
 }
 """)
   }
@@ -138,7 +147,7 @@ object NearestCell {
       GraftBridge.expression(cents), GraftBridge.expression(emb)))
 
   /** The one loop behind both execution paths of [[NearestCellExpr]]:
-    * `cents` is non-null and non-empty, `emb` may be null. */
+    * `cents` is non-null and non-empty, `emb` non-null. */
   def best(cents: ArrayData, numFields: Int, cellIdx: Int, cellIsLong: Boolean,
       cembIdx: Int, cembIsFloat: Boolean, emb: ArrayData, embIsFloat: Boolean,
       failOnError: Boolean): InternalRow = {
@@ -161,7 +170,7 @@ object NearestCell {
               (if (failOnError) MathUtils.negateExact(v) else -v).toLong
             }
         }
-        if (emb != null && !c.isNullAt(cembIdx)) {
+        if (!c.isNullAt(cembIdx)) {
           // CosineSimilarityExpr's arithmetic, then r4's floor → long
           val y = c.getArray(cembIdx)
           val len = math.min(emb.numElements(), y.numElements())

@@ -1334,7 +1334,7 @@ object Dedup {
     val (index, cb) = Similarity.readSemanticIndex(s,
       Similarity.ensureSemanticIndex(s, dir, nl, iters))
     val probes = t(s, dir, "embeddings")
-      .filter(col("vec_id") >= splitId)
+      .filter(col("vec_id") >= splitId && col("embedding").isNotNull)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("emb"))
       .crossJoin(broadcast(cb))

@@ -409,7 +409,8 @@ object Similarity {
     * exchange at 100 TB. Here assignment is one map-side scan, zero
     * shuffles, and the embedding never leaves its row. */
   private def seededAssign(corpus: DataFrame, cent: DataFrame): DataFrame =
-    corpus.crossJoin(broadcast(seededCodebookRow(cent)))
+    corpus.filter(col("c_emb").isNotNull)
+      .crossJoin(broadcast(seededCodebookRow(cent)))
       .withColumn("best", bestCellStruct(col("cents"), col("c_emb")))
       .select(col("c_id"), (-col("best.nc")).as("cell"), col("c_emb"))
 
@@ -460,7 +461,8 @@ object Similarity {
     // corpus×nlist Sort + Exchange + SortAggregate first
     val corpus = emb.select(col("vec_id").as("c_id"),
       col("embedding").as("c_emb"), col("label"))
-    val assigned = corpus.crossJoin(broadcast(seededCodebookRow(cent)))
+    val assigned = corpus.filter(col("c_emb").isNotNull)
+      .crossJoin(broadcast(seededCodebookRow(cent)))
       .withColumn("best", bestCellStruct(col("cents"), col("c_emb")))
       .select(col("c_id"), col("c_emb"), col("label"),
         (-col("best.nc")).as("cell"))
@@ -1100,6 +1102,7 @@ object Similarity {
   private[ops] def trainedAssignedVectors(s: SparkSession, dir: String,
       nlist: Int, iters: Int): DataFrame = {
     t(s, dir, "embeddings")
+      .filter(col("embedding").isNotNull)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("emb"))
       .crossJoin(broadcast(trainedCodebookRow(s, dir, nlist, iters)))
@@ -1179,7 +1182,10 @@ object Similarity {
     * desynchronize. It is the native `nearest_cell` kernel
     * ([[graft.functions.NearestCellExpr]]), equal for every input to
     * the interpreted `array_max(transform(cents, c => struct(
-    * r4(cosine(emb, c.cemb)) AS s, -c.cell AS nc)))` it replaced. */
+    * r4(cosine(emb, c.cemb)) AS s, -c.cell AS nc)))` it replaced, except
+    * that a null `emb` gives null: every caller drops the rows whose
+    * vector is null before it assigns a cell, so a row with no vector
+    * is in no cell. */
   def bestCellStruct(cents: Column, emb: Column): Column =
     graft.functions.NearestCell(cents, emb)
 

@@ -37,14 +37,15 @@ import org.apache.spark.sql.types.StructType
   * '''Missing path.''' No stamp can be taken, so the read falls through
   * to `s.read.parquet(path)` and raises Spark's own AnalysisException.
   *
-  * Each read also installs [[InPlaceSortStrategy]] into the session:
-  * every registry query reads through here, so every registry session
-  * plans with it. */
+  * Each read also installs [[InPlaceSortStrategy]] and
+  * [[OneSplitScanStrategy]] into the session: every registry query
+  * reads through here, so every registry session plans with both. */
 object Tables {
   private val schemas = new ConcurrentHashMap[String, (String, StructType)]()
 
   def read(s: SparkSession, path: String): DataFrame = {
     InPlaceSortStrategy.install(s)
+    OneSplitScanStrategy.install(s)
     val stamp =
       try Some(Artifacts.contentStamp(s, path))
       catch { case _: FileNotFoundException => None }

@@ -222,6 +222,7 @@ object Streams {
       cents: DataFrame, threshold: Double = 0.4): DataFrame = {
     import graft.ops.{Relational, Similarity}
     val probe = vecs
+      .filter(col("embedding").isNotNull)
       .select(col("vec_id").as("probe_id"),
         transform(col("embedding"), x => x.cast("double")).as("emb_b"))
       .crossJoin(broadcast(cents))

@@ -157,4 +157,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(built.contains(graft.stream.PartitionPreviewStrategy))
     assert(built.contains(graft.ops.InPlaceSortStrategy))
   }
+
+  test("the extension injects the one-split scan strategy") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val built = ext.getClass
+      .getMethod("buildPlannerStrategies", classOf[org.apache.spark.sql.SparkSession])
+      .invoke(ext, SparkSpec.session).asInstanceOf[Seq[AnyRef]]
+    assert(built.contains(graft.ops.OneSplitScanStrategy))
+  }
 }

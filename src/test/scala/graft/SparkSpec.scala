@@ -1,14 +1,50 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.scalactic.source.Position
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.stream.SessionStrategy
 
 /** Shared local SparkSession for specs (one JVM-wide session — Spark
   * getOrCreate caches it, so suites share safely). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `strategy` out of the session's planner. A
+    * placeholder that plans nothing and equals `strategy` holds its
+    * place, so a table read inside `body`, which installs the
+    * strategy, finds it already there; afterwards the strategy is back
+    * where it was, or absent if it was. */
+  protected def withoutStrategy[A](strategy: SessionStrategy)(body: => A): A = {
+    val off = new SparkStrategy {
+      override def apply(plan: LogicalPlan): Seq[SparkPlan] = Nil
+      override def equals(o: Any): Boolean = o == strategy
+      override def hashCode: Int = strategy.hashCode
+    }
+    val x = spark.experimental
+    val had = x.synchronized {
+      val had = x.extraStrategies.contains(strategy)
+      x.extraStrategies =
+        if (had) x.extraStrategies.map(s => if (s eq strategy) off else s)
+        else x.extraStrategies :+ off
+      had
+    }
+    try body
+    finally x.synchronized {
+      x.extraStrategies =
+        if (had) x.extraStrategies.map(s => if (s eq off) strategy else s)
+        else x.extraStrategies.filterNot(_ eq off)
+    }
+  }
+
+  /** A case that runs with `strategy` out of the session's planner. */
+  protected def testWithout(strategy: SessionStrategy)(name: String)(body: => Any)(
+      implicit pos: Position): Unit =
+    test(name)(withoutStrategy(strategy)(body))
 
   /** ONE driver-side definition of the kernel cosine arithmetic
     * (left-to-right double accumulation, sqrt·sqrt denominator) and

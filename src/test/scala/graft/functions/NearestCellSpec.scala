@@ -8,15 +8,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** `nearest_cell` against the higher-order-function column it
-  * replaced, kept here as the twin: equal values and equal result
-  * type for every case, under generated code and under interpreted
-  * evaluation. */
+  * replaced, kept here as the twin (with a null `emb` mapped to null):
+  * equal values and equal result type for every case, under generated
+  * code and under interpreted evaluation. */
 class NearestCellSpec extends SparkSpec {
 
-  /** The composable twin: array_max over struct(r4 cosine, -cell). */
+  /** The composable twin: array_max over struct(r4 cosine, -cell),
+    * null for a null emb. */
   private def hof(cents: Column, emb: Column): Column =
-    array_max(transform(cents, c =>
-      struct(r4(Similarity.cosine(emb, c("cemb"))).as("s"), (-c("cell")).as("nc"))))
+    when(emb.isNull, null).otherwise(array_max(transform(cents, c =>
+      struct(r4(Similarity.cosine(emb, c("cemb"))).as("s"), (-c("cell")).as("nc")))))
 
   /** A centroid: `cell` and `cemb` may each be null. */
   private case class Cent(cell: Any, cemb: Seq[Any])
@@ -185,8 +186,8 @@ class NearestCellSpec extends SparkSpec {
     assert(got("nan in cemb beats a negative") == Row(0.0, -1L))
     assert(got("nan in cemb loses to a positive") ==
       Row(modelR4(modelCosD(Array(1.0, 0.5), Array(1.0, 0.2))), -5L))
-    // a null emb scores every centroid null and lands in the lowest cell
-    assert(got("null emb") == Row(null, -3L))
+    // a row with no vector has no nearest cell
+    assert(got("null emb") == null && got("null cell and null emb") == null)
     assert(got("zero-norm emb") == Row(null, -2L))
     assert(got("only null elements in cents") == Row(null, null))
     assert(got("empty cents") == null && got("null cents") == null)

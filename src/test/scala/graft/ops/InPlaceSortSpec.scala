@@ -7,7 +7,10 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** The in-place sort: a global sort over a small materialized stage
-  * runs in one task with no range shuffle, and only then. */
+  * runs in one task with no range shuffle, and only then. Each case
+  * runs with [[OneSplitScanStrategy]] out of the planner: every
+  * sf0.001 input is one split, which that strategy already sorts in
+  * its scan task, so no stage would run for this one to act on. */
 class InPlaceSortSpec extends SparkSpec {
 
   private def m01(): DataFrame = SparkEntry.queries("m01_media_meta")(spark, sf0001)
@@ -27,13 +30,6 @@ class InPlaceSortSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  /** Runs `body` with the strategy out of the session's planner. */
-  private def withoutStrategy[A](body: => A): A = {
-    val x = spark.experimental
-    x.extraStrategies = x.extraStrategies.filterNot(_ == InPlaceSortStrategy)
-    try body finally InPlaceSortStrategy.install(spark)
   }
 
   /** Jobs started while `body` runs (listener plus one sentinel RDD
@@ -58,7 +54,8 @@ class InPlaceSortSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("m01: the final plan sorts in one task with no range exchange, in " +
+  testWithout(OneSplitScanStrategy)(
+    "m01: the final plan sorts in one task with no range exchange, in " +
     "2 jobs, with the rows the range-shuffled sort gives") {
     val df = m01()
     var rows: Seq[org.apache.spark.sql.Row] = Nil
@@ -68,7 +65,7 @@ class InPlaceSortSpec extends SparkSpec {
     assert(plan.contains("coalesce 1"), plan)
     assert(jobs == 2, s"expected the stage job and the result job, saw $jobs")
     val ref = m01()
-    val expected = withoutStrategy {
+    val expected = withoutStrategy(InPlaceSortStrategy) {
       val r = ref.collect().toSeq
       assert(finalPlan(ref).contains("rangepartitioning"), finalPlan(ref))
       r
@@ -76,7 +73,8 @@ class InPlaceSortSpec extends SparkSpec {
     assert(rows.nonEmpty && rows == expected)
   }
 
-  test("an input above the one-partition size keeps its range exchange") {
+  testWithout(OneSplitScanStrategy)(
+    "an input above the one-partition size keeps its range exchange") {
     withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
       val df = m01()
       df.collect()
@@ -85,12 +83,13 @@ class InPlaceSortSpec extends SparkSpec {
     }
   }
 
-  test("the pre-execution plan is the one planned without the strategy") {
+  testWithout(OneSplitScanStrategy)(
+    "the pre-execution plan is the one planned without the strategy") {
     val df = m01()
     val norm = (p: String) => p.replaceAll("plan_id=\\d+", "plan_id=N")
     val withIt = norm(df.queryExecution.executedPlan.toString)
     assert(withIt.toLowerCase.contains("rangepartitioning"), withIt)
-    val without = withoutStrategy {
+    val without = withoutStrategy(InPlaceSortStrategy) {
       val qe = df.queryExecution.sparkSession.sessionState
         .executePlan(df.queryExecution.logical)
       norm(qe.executedPlan.toString)
@@ -98,7 +97,8 @@ class InPlaceSortSpec extends SparkSpec {
     assert(withIt == without)
   }
 
-  test("with AQE off the strategy never fires") {
+  testWithout(OneSplitScanStrategy)(
+    "with AQE off the strategy never fires") {
     withConf("spark.sql.adaptive.enabled" -> "false") {
       val df = m01()
       df.collect()
@@ -107,7 +107,8 @@ class InPlaceSortSpec extends SparkSpec {
     }
   }
 
-  test("a sort over a Generate keeps its exchange") {
+  testWithout(OneSplitScanStrategy)(
+    "a sort over a Generate keeps its exchange") {
     val df = Relational.t(spark, sf0001, "nation")
       .groupBy("n_regionkey").agg(collect_list("n_name").as("names"))
       .select(explode(col("names")).as("n_name"))

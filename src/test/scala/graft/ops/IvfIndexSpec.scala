@@ -3,7 +3,7 @@ package graft.ops
 import graft.SparkSpec
 import graft.ops.Similarity.AnnRead
 import graft.ops.Similarity.AnnRead.{At, Current, Router, Trained}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Persisted IVF index: layout-as-inverted-file. The value claim is
   * twofold — (a) results are byte-identical to the per-query plan
@@ -20,6 +20,21 @@ class IvfIndexSpec extends SparkSpec {
     val viaIdx = AnnRead(layout = At(idxPath))(spark, sf0001)
       .collect().map(_.toSeq).toList
     assert(viaIdx == direct)
+  }
+
+  test("a row with a null embedding is in no cell of the built index") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_emb").toString
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val noVector = emb.limit(1).select(emb.schema.fields.toSeq.map {
+      case f if f.name == "vec_id" => lit(-1).cast(f.dataType).as(f.name)
+      case f if f.name == "embedding" => lit(null).cast(f.dataType).as(f.name)
+      case f => col(f.name)
+    }: _*)
+    emb.unionByName(noVector).write.parquet(s"$dir/embeddings.parquet")
+    Similarity.buildIvfIndex(spark, dir, s"$dir/index")
+    val index = spark.read.parquet(s"$dir/index")
+    assert(index.filter(col("c_id") === -1).isEmpty)
+    assert(index.count() == emb.count())
   }
 
   test("ensureIvfIndex is idempotent and addressable from the corpus dir alone") {

@@ -13,6 +13,12 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * query survives a 100× scale-up: filters reach the parquet scan,
   * small dims broadcast (no fact-table sort-merge), aggregates
   * partial-aggregate map-side, scans prune columns.
+  *
+  * Every sf0.001 input is one file split, which [[OneSplitScanStrategy]]
+  * plans with no exchange above the scan. The cases that pin the
+  * exchanges and joins a multi-split input plans (`testWithout`) run
+  * with that strategy out of the planner, so they keep gating the
+  * plan of the scaled-up query.
   */
 class PlanSpec extends SparkSpec {
 
@@ -301,7 +307,8 @@ class PlanSpec extends SparkSpec {
       s"binned range join must not theta-probe:\n$p")
   }
 
-  test("c08: vocab map broadcasts; packing window is lang-partitioned") {
+  testWithout(OneSplitScanStrategy)(
+    "c08: vocab map broadcasts; packing window is lang-partitioned") {
     val df = Curation.packedIdsStats(spark, sf0001)
     df.collect()
     val p = finalOnly(df.queryExecution.executedPlan.toString)
@@ -325,7 +332,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Expand"), s"multi-distinct Expand crept back in:\n$p")
   }
 
-  test("c10: stratum classification broadcasts; only the boundary stratum windows") {
+  testWithout(OneSplitScanStrategy)(
+    "c10: stratum classification broadcasts; only the boundary stratum windows") {
     val df = Curation.tokenBudgetStats(spark, sf0001)
     df.collect()
     val p = finalOnly(df.queryExecution.executedPlan.toString)
@@ -367,7 +375,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Sort [draw"), s"global sort on the draw crept in:\n$p")
   }
 
-  test("e14: the three stacked funnel windows share one user_id exchange, no join") {
+  testWithout(OneSplitScanStrategy)(
+    "e14: the three stacked funnel windows share one user_id exchange, no join") {
     val df = Events.multiStepFunnel(spark, sf0001)
     df.collect()
     val p = finalOnly(df.queryExecution.executedPlan.toString)
@@ -410,7 +419,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), s"d19 plan regressed to SMJ:\n$p")
   }
 
-  test("no query in the registry plans a CartesianProduct or a SortMergeJoin") {
+  testWithout(OneSplitScanStrategy)(
+    "no query in the registry plans a CartesianProduct or a SortMergeJoin") {
     // the global gate behind the per-query ones above: every join in
     // the full query registry broadcasts (or is a broadcast nested
     // loop for deliberate small-side non-equi joins) — a cartesian or
@@ -496,7 +506,8 @@ class PlanSpec extends SparkSpec {
     assert(hints == 1, s"expected the bloom hint only, found $hints")
   }
 
-  test("e16: OHLC is ONE partial+final aggregate pair — no window, no second shuffle") {
+  testWithout(OneSplitScanStrategy)(
+    "e16: OHLC is ONE partial+final aggregate pair — no window, no second shuffle") {
     val p = plan(Events.ohlcDownsample(spark, sf0001))
     assert(!p.contains("Window"), "OHLC must not plan a window")
     assert("HashAggregate|SortAggregate".r.findAllIn(p).length >= 2,
@@ -514,7 +525,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"))
   }
 
-  test("l01: z computation is in-scan project; one hash shuffle for the bucket agg") {
+  testWithout(OneSplitScanStrategy)(
+    "l01: z computation is in-scan project; one hash shuffle for the bucket agg") {
     val df = graft.SparkEntry.queries("l01_zorder")(spark, sf0001)
     val p = plan(df)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
@@ -526,7 +538,8 @@ class PlanSpec extends SparkSpec {
     assert(df.queryExecution.executedPlan.toString.contains("*(1)"))
   }
 
-  test("l02: hilbert kernel runs in-scan; one hash shuffle; codegen span holds") {
+  testWithout(OneSplitScanStrategy)(
+    "l02: hilbert kernel runs in-scan; one hash shuffle; codegen span holds") {
     val df = graft.SparkEntry.queries("l02_hilbert")(spark, sf0001)
     val p = plan(df)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
@@ -731,7 +744,8 @@ class PlanSpec extends SparkSpec {
     assert(kept > 0 && kept < all)
   }
 
-  test("p11: replica explosion collapses map-side — partial agg below the exchange") {
+  testWithout(OneSplitScanStrategy)(
+    "p11: replica explosion collapses map-side — partial agg below the exchange") {
     val p = plan(Sampling.bootstrapMeans(spark, sf0001))
     val lines = p.linesIterator.toVector
     val firstAgg = lines.lastIndexWhere(_.contains("HashAggregate"))

@@ -25,7 +25,9 @@ Usage:
     tools/plan_diff.py DIR            # every <q>_before.txt / <q>_after.txt pair
 
 Prints a unified diff for every pair that differs and a one-line
-summary per pair. Exit status: 0 when every pair is identical, 1 when
+summary per pair, which also counts the shuffle `Exchange` nodes of
+each side (broadcast and reused exchanges are not counted), e.g.
+`q: DIFFERS (4 changed lines, shuffles 2 → 0)`. Exit status: 0 when every pair is identical, 1 when
 any differs, 2 on a usage error or a pair with a missing side.
 """
 import difflib
@@ -56,6 +58,10 @@ _RULES = [
     (re.compile(r"(\w+RDD)\[\d+\] at (\w+) at ([\w$]+\.scala):\d+"),
      r"\1[N] at \2 at \3:N"),
 ]
+
+# a shuffle exchange's node in the plan tree (not BroadcastExchange or
+# ReusedExchange, not its "(N) Exchange" detail header)
+_SHUFFLE = re.compile(r"(?<!\w)Exchange \(\d+\)$", re.M)
 
 _EXPAND = re.compile(r"^Arguments: \[(\[.*\])\], \[([^\[\]]*\bgid#\d+[^\[\]]*)\]$",
                      re.M)
@@ -127,13 +133,22 @@ def normalize(text):
     return text
 
 
+def shuffles(text):
+    """Number of shuffle Exchange nodes in a formatted plan."""
+    return len(_SHUFFLE.findall(text))
+
+
 def diff_pair(before, after):
-    """Unified diff lines of the two normalized dumps (empty = same)."""
+    """Unified diff lines of the two normalized dumps (empty = same)
+    and the shuffle count of each side."""
     with open(before) as f:
-        a = normalize(f.read()).splitlines(keepends=True)
+        a = f.read()
     with open(after) as f:
-        b = normalize(f.read()).splitlines(keepends=True)
-    return list(difflib.unified_diff(a, b, before, after))
+        b = f.read()
+    lines = list(difflib.unified_diff(normalize(a).splitlines(keepends=True),
+                                      normalize(b).splitlines(keepends=True),
+                                      before, after))
+    return lines, (shuffles(a), shuffles(b))
 
 
 def pairs_in(directory):
@@ -160,15 +175,15 @@ def main(argv):
             print(f"{name}: MISSING {', '.join(missing)}")
             status = 2
             continue
-        lines = diff_pair(before, after)
+        lines, (sa, sb) = diff_pair(before, after)
         if lines:
             sys.stdout.writelines(lines)
             changed = sum(1 for l in lines
                           if l[:1] in "+-" and l[:3] not in ("+++", "---"))
-            print(f"{name}: DIFFERS ({changed} changed lines)")
+            print(f"{name}: DIFFERS ({changed} changed lines, shuffles {sa} → {sb})")
             status = max(status, 1)
         else:
-            print(f"{name}: identical")
+            print(f"{name}: identical (shuffles {sa} → {sb})")
     return status
 
 
