@@ -4,6 +4,8 @@ import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
 /** The one parquet table reader: every plain-path table or artifact
@@ -26,13 +28,27 @@ import org.apache.spark.sql.types.StructType
   *    returns (`nanosAsLong` turns a TIMESTAMP(NANOS) column into a
   *    Long, or into an error when off).
   * A read whose key differs from the entry's infers again and replaces
-  * the entry, so the cache holds at most one schema per path.
+  * the entry, so the cache holds at most one entry per path.
   *
   * '''Hit.''' `s.read.schema(cached).parquet(path)`: Spark skips
   * inference. The cached schema is the one Spark itself inferred, so
-  * the relation and its plan are the ones an inferring read gives, and
-  * each call still builds a new relation with fresh attribute ids
-  * (self-joins behave as before).
+  * the relation and its plan are the ones an inferring read gives.
+  *
+  * '''Same session.''' Resolving even a schema-given read costs driver
+  * time on every call: Spark looks the format up, builds a Hadoop
+  * configuration and lists the files into a new file index. So the
+  * entry also keeps the relation the last read resolved, with its
+  * session, and a hit by that same session is
+  * `s.baseRelationToDataFrame(relation)`: a new `LogicalRelation` over
+  * the kept relation, as Spark's catalog serves a table's cached
+  * relation. A relation reads with its own session's conf, so a hit by
+  * another session resolves again and the entry then keeps that
+  * session's relation. The key vouches for the kept file listing as it
+  * does for the schema: a rewrite moves the stamp, and the next read
+  * lists again. An entry holds its session until another session or
+  * key replaces it.
+  *
+  * Every read gets fresh attribute ids, so self-joins behave as before.
   *
   * '''Missing path.''' No stamp can be taken, so the read falls through
   * to `s.read.parquet(path)` and raises Spark's own AnalysisException.
@@ -41,7 +57,9 @@ import org.apache.spark.sql.types.StructType
   * [[OneSplitScanStrategy]] into the session: every registry query
   * reads through here, so every registry session plans with both. */
 object Tables {
-  private val schemas = new ConcurrentHashMap[String, (String, StructType)]()
+  private final case class Entry(key: String, schema: StructType, session: SparkSession,
+      relation: Option[BaseRelation])
+  private val entries = new ConcurrentHashMap[String, Entry]()
 
   def read(s: SparkSession, path: String): DataFrame = {
     InPlaceSortStrategy.install(s)
@@ -56,11 +74,17 @@ object Tables {
         val qualified =
           p.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(p).toString
         val key = s"$st|${parquetConf(s)}"
-        schemas.get(qualified) match {
-          case (k, schema) if k == key => s.read.schema(schema).parquet(path)
+        val hit = Option(entries.get(qualified)).filter(_.key == key)
+        hit match {
+          case Some(Entry(_, _, session, Some(rel))) if session eq s =>
+            s.baseRelationToDataFrame(rel)
           case _ =>
-            val df = s.read.parquet(path)
-            schemas.put(qualified, (key, df.schema))
+            val df = hit.fold(s.read.parquet(path))(e => s.read.schema(e.schema).parquet(path))
+            val rel = df.queryExecution.analyzed match {
+              case l: LogicalRelation => Some(l.relation)
+              case _ => None
+            }
+            entries.put(qualified, Entry(key, df.schema, s, rel))
             df
         }
     }

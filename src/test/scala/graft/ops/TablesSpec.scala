@@ -4,12 +4,14 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** The table reader: one schema inference per table content and
-  * parquet conf, the same answers and errors as an inferring read. */
+  * parquet conf, one resolved relation per table content, parquet conf
+  * and session, the same answers and errors as an inferring read. */
 class TablesSpec extends SparkSpec {
 
   private lazy val tmp = Files.createTempDirectory("graft-tables").toString
@@ -70,6 +72,33 @@ class TablesSpec extends SparkSpec {
       spark.read.parquet(s"$sf0001/nation.parquet").as("x")
         .join(spark.read.parquet(s"$sf0001/nation.parquet").as("y"),
           col("x.n_nationkey") === col("y.n_regionkey")).count())
+  }
+
+  test("a repeated read in one session reuses the resolved relation under " +
+    "fresh attribute ids; a rewrite or another session resolves its own") {
+    def relation(df: DataFrame): LogicalRelation = df.queryExecution.analyzed match {
+      case l: LogicalRelation => l
+      case other => fail(s"expected a bare LogicalRelation, got\n$other")
+    }
+    val a = relation(Relational.t(spark, sf0001, "nation"))
+    val b = relation(Relational.t(spark, sf0001, "nation"))
+    assert(a.relation eq b.relation)
+    assert(a.output.map(_.exprId).intersect(b.output.map(_.exprId)).isEmpty)
+
+    val other = spark.newSession()
+    val c = relation(Relational.t(other, sf0001, "nation")).relation
+    assert(c.asInstanceOf[HadoopFsRelation].sparkSession eq other)
+    assert(relation(Relational.t(spark, sf0001, "nation")).relation ne c)
+
+    val dir = s"$tmp/relist"
+    val region = Relational.t(spark, sf0001, "region")
+    region.write.mode("overwrite").parquet(s"$dir/r.parquet")
+    val first = Relational.t(spark, dir, "r")
+    assert(first.count() == 5)
+    region.union(region).write.mode("overwrite").parquet(s"$dir/r.parquet")
+    val second = Relational.t(spark, dir, "r")
+    assert(relation(second).relation ne relation(first).relation)
+    assert(second.count() == 10)
   }
 
   test("a table rewritten with an added column reads with the new schema") {
