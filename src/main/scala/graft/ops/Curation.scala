@@ -846,7 +846,10 @@ object Curation {
     // unique-key aggregate when no right column survives — the number
     // is a lie (collect-mode measured 1.73 s); per-n GLOBAL aggs are
     // the unprunable completion; (b) the per-branch shape below keeps
-    // hitless-n rows by construction. Keep the branches.
+    // hitless-n rows by construction. Keep the branches. (The recall
+    // curves in Similarity do fold their points into one sweep: their
+    // candidate rows are narrow, while here the melt cost above is why
+    // c14 is not folded.)
     ns.map { n =>
       val bench = sets.filter(col("source") === benchSource)
         .select(explode(col(s"hs$n")).as("h")).distinct()

@@ -39,12 +39,6 @@ import graft.ops.Relational.t
   */
 object Multimodal {
 
-  /** Media record: blob + typed metadata. In a real corpus this is the
-    * parquet schema; here we derive blobs deterministically from
-    * documents.text (UTF-8 bytes) so tests are self-contained. */
-  final case class MediaRecord(media_id: Long, kind: String, blob: Array[Byte],
-      byte_len: Long)
-
   /** A synthesized-but-real image file: `blob` holds actual PNG or BMP
     * bytes (magic number, headers, filters/RLE, the lot). */
   final case class ImageBlob(media_id: Long, fmt: String, blob: Array[Byte])

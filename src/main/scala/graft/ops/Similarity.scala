@@ -97,9 +97,10 @@ object Similarity {
     * that is the difference between a spilling sort and a pipeline.
     * Ties break on ascending c_id — identical to the window's
     * `ORDER BY sim DESC, c_id` contract, so swapping the two
-    * formulations is byte-identical. */
-  private def topKPerQuery(s: SparkSession, scored: DataFrame, k: Int,
-      sorted: Boolean = true): DataFrame = {
+    * formulations is byte-identical. `keys` are the grouping columns;
+    * [[sweepTopK]] adds the curve point in front of `q_id`. */
+  private[ops] def topKPerQuery(s: SparkSession, scored: DataFrame, k: Int,
+      sorted: Boolean = true, keys: Seq[String] = Seq("q_id")): DataFrame = {
     // r20: the typed-Aggregator formulation (groupByKey + mapValues +
     // agg + flatMap) ran under DeserializeToObject/AppendColumns/
     // SerializeFromObject — every candidate row converted Tungsten →
@@ -111,18 +112,64 @@ object Similarity {
     // oracles pin the paths). The casts replicate the old
     // `as[(Long, Long, Double)]` conversions (no-ops when already
     // long/double).
-    val ranked = scored.select(col("q_id").cast("long").as("q_id"),
-        col("c_id").cast("long").as("c_id"),
-        col("sim").cast("double").as("sim"))
-      .groupBy("q_id")
+    val keyCols = keys.map(c => if (c == "q_id") col(c).cast("long").as(c) else col(c))
+    val ranked = scored.select(keyCols ++ Seq(col("c_id").cast("long").as("c_id"),
+        col("sim").cast("double").as("sim")): _*)
+      .groupBy(keys.map(col): _*)
       .agg(TopKRows(k, col("c_id"), col("sim")).as("tops"))
-      .select(col("q_id"), posexplode(col("tops")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col.id").as("c_id"), col("col.score").as("sim"))
+      .select(keys.map(col) :+ posexplode(col("tops")): _*)
+      .select(keys.map(col) ++ Seq((col("pos") + 1).cast("long").as("rnk"),
+        col("col.id").as("c_id"), col("col.score").as("sim")): _*)
     // the presentation sort is for terminal results only — mid-plan
     // callers (IVF probe selection) immediately re-join and would pay
     // the exchange+sort for nothing
-    if (sorted) ranked.orderBy("q_id", "rnk") else ranked
+    if (sorted) ranked.orderBy(keys.map(col) :+ col("rnk"): _*) else ranked
+  }
+
+  /** Every point of a recall curve ranked in ONE bounded-heap pass.
+    * `points` are (label, visible) pairs: a candidate row takes part
+    * in point `label` where `visible` holds. Each row is exploded to
+    * the labels it is visible at, and [[topKPerQuery]] ranks the
+    * (point, q_id) groups once — group (p, q) holds exactly q's rows of
+    * `cands.filter(visible_p)`, so each point's top-k is the one a
+    * separate per-point ranking would give. Visibility need not be
+    * nested in the points. Returns (point, q_id, rnk, c_id, sim). */
+  private[ops] def sweepTopK(cands: DataFrame, k: Int,
+      points: Seq[(Column, Column)]): DataFrame =
+    topKPerQuery(cands.sparkSession,
+      cands.withColumn("point",
+        explode(array_compact(array(points.map { case (l, v) => when(v, l) }: _*)))),
+      k, sorted = false, keys = Seq("point", "q_id"))
+
+  /** The recall tail every curve shares: `truth` (q_id, c_id) is
+    * exploded over the curve's point `labels` and left-joined to the
+    * `ranked` (point, q_id, c_id, rnk) rows, so a point whose top-k
+    * misses every truth pair still yields its row. Per point: n_truth,
+    * n_hits, recall_milli, and the ranking sums s23 reports — rr_sum
+    * (floor-div micros of each query's first-hit reciprocal rank) and
+    * dcg_sum (the [[ndcgGainsMicro]] gains of the hits). Queries with
+    * no hit drop out of both sums (null, not 0). A caller that selects
+    * only the recall columns has the ranking aggregates pruned. */
+  private[ops] def recallTally(truth: DataFrame, ranked: DataFrame,
+      labels: Seq[Column], k: Int): DataFrame = {
+    // the gain is looked up on the ranked side, where rnk is never null
+    val gain = element_at(array(ndcgGainsMicro(k).map(g => lit(g)): _*),
+      col("rnk").cast("int"))
+    // both sides are |labels|·k·nQueries rows at most: the ranked side
+    // broadcasts, so the truth side keeps its partitioning and is never
+    // shuffled for the join
+    truth.select(explode(array(labels: _*)).as("point"), col("q_id"), col("c_id"))
+      .join(broadcast(ranked.select(col("point"), col("q_id"), col("c_id"),
+          col("rnk"), gain.as("gain"))),
+        Seq("point", "q_id", "c_id"), "left")
+      .groupBy("point", "q_id")
+      .agg(count(lit(1)).as("q_truth"), count("rnk").as("q_hits"),
+        min("rnk").as("first_rnk"), sum("gain").as("q_dcg"))
+      .groupBy("point")
+      .agg(sum("q_hits").as("n_hits"), sum("q_truth").as("n_truth"),
+        coalesce(sum(expr("1000000 div first_rnk")), lit(0L)).as("rr_sum"),
+        coalesce(sum("q_dcg"), lit(0L)).as("dcg_sum"))
+      .withColumn("recall_milli", expr("n_hits * 1000 div n_truth"))
   }
 
   /** LSH-bucketed ANN: candidates = pairs colliding in any of the
@@ -825,18 +872,21 @@ object Similarity {
     * exactly 1000, the exhaustive-router identity of the s20
     * scaladoc, here hash-certified by the oracle on every gate run.
     *
-    * Scale design: the per-cp fine probe sets are re-ranked from ONE
-    * checkpointed routed-sims frame (≤ nQueries·nlist rows — codebook
-    * arithmetic, not data); the corpus is scanned ONCE against the
-    * union of all curve points' probe cells (≤ |cprobes|·nprobe cells
-    * per query) and each curve point filters that checkpointed frame —
-    * the advisory costs one s20 corpus pass regardless of curve
-    * length, the s17 shape. Fine probes per cp must genuinely re-rank
-    * (the top-nprobe of a routed SUBSET is not a prefix of the
+    * Scale design: ONE [[sweepTopK]] ranks the fine probes of every
+    * cp from the routed-sims frame (≤ nQueries·nlist rows — codebook
+    * arithmetic, not data), each routed centroid visible at the cps
+    * whose coarse cut holds it. Fine probes per cp must genuinely
+    * re-rank (the top-nprobe of a routed SUBSET is not a prefix of the
     * superset's ranking), which is why the fine level cannot reuse
-    * s17's nested rank≤p trick. Reference analog: the group/agg
-    * chains of streamable/stream.py:230-326, specialized to recall
-    * accounting over the routing depth. */
+    * s17's nested rank≤p trick. The corpus is scanned ONCE against the
+    * union of all curve points' probe cells (≤ |cprobes|·nprobe cells
+    * per query); joining the scored candidates to every cp's probe
+    * cells tags each row with its cprobe, so ONE ranking over
+    * (cprobe, q_id) groups gives every point's top-k, and ONE
+    * [[recallTally]] counts them — one s20 corpus pass and a fixed
+    * number of rankings regardless of curve length. Reference analog:
+    * the group/agg chains of streamable/stream.py:230-326, specialized
+    * to recall accounting over the routing depth. */
   def cprobeRecallCurve(s: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, nlist: Int = 32, ncoarse: Int = 8, nprobe: Int = 4,
       cprobes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
@@ -859,18 +909,13 @@ object Similarity {
         col("rnk").as("co_rnk"))
     val routedSims = route.join(broadcast(coarseProbes), "co_cell")
       .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("cent_id"), col("co_rnk"),
+      .select(col("q_id"), col("cent_id").as("c_id"), col("co_rnk"),
         r4(cosine(col("q_emb"), col("cent_emb"))).as("sim"))
+    // every curve point's fine probes from ONE ranking of the routed sims
+    val probesAll = sweepTopK(routedSims, nprobe,
+        cprobes.map(cp => lit(cp.toLong) -> (col("co_rnk") <= cp)))
+      .select(col("point"), col("q_id"), col("c_id").as("cell"))
       .localCheckpoint(eager = false)
-    // per curve point: re-rank the routed fine subset to nprobe cells
-    val probesAll = cprobes.map { cp =>
-      topKPerQuery(s,
-        routedSims.filter(col("co_rnk") <= cp)
-          .select(col("q_id"), col("cent_id").as("c_id"), col("sim")),
-        nprobe, sorted = false)
-        .select(lit(cp.toLong).as("cprobe"), col("q_id"),
-          col("c_id").as("cell"))
-    }.reduce(_ union _).localCheckpoint(eager = false)
     // ONE corpus pass over the union of all probed cells
     val corpus = emb.select(col("vec_id").as("c_id"),
       col("embedding").as("c_emb"))
@@ -881,24 +926,16 @@ object Similarity {
       .join(broadcast(queries), "q_id")
       .select(col("q_id"), col("cell"), col("c_id"),
         r4(cosine(col("q_emb"), col("c_emb"))).as("sim"))
-      .localCheckpoint(eager = false)
     val baseline = AnnRead(nQueries = nQueries, k = k, nlist = nlist,
-      nprobe = nprobe)(s, dir)
-      .select("q_id", "c_id").localCheckpoint(eager = false)
-    val perCp = cprobes.map { cp =>
-      topKPerQuery(s,
-        scoredCand.join(
-          broadcast(probesAll.filter(col("cprobe") === cp)
-            .select("q_id", "cell")),
-          Seq("q_id", "cell")),
-        k, sorted = false)
-        .join(baseline, Seq("q_id", "c_id"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(cp.toLong).as("cprobe"), col("n_hits"))
-    }.reduce(_ union _)
-    perCp
-      .crossJoin(broadcast(baseline.groupBy().agg(count(lit(1)).as("n_truth"))))
-      .withColumn("recall_milli", expr("n_hits * 1000 div n_truth"))
+      nprobe = nprobe)(s, dir).select("q_id", "c_id")
+    // each candidate row joined to every cprobe that probes its cell
+    // carries that cprobe: ONE ranking over (cprobe, q_id) groups
+    val ranked = topKPerQuery(s,
+      scoredCand.join(broadcast(probesAll), Seq("q_id", "cell")),
+      k, sorted = false, keys = Seq("point", "q_id"))
+    recallTally(baseline, ranked, cprobes.map(cp => lit(cp.toLong)), k)
+      .select(col("point").as("cprobe"), col("n_hits"), col("n_truth"),
+        col("recall_milli"))
       .orderBy("cprobe")
   }
 
@@ -1938,49 +1975,22 @@ object Similarity {
     * scaladoc claim "recall < 1 when a true neighbor lives in an
     * unprobed cell" becomes a per-setting table instead of prose.
     *
-    * Scale design: probe selection runs once at max(nprobes) with the
-    * probe RANK carried through — the nprobe=p candidate set is
-    * exactly the rows with probe_rnk ≤ p (probe lists are nested by
-    * construction: same order, deeper cut), so the corpus is scanned
-    * once for assignment, once for candidate scoring, once for the
-    * exact truth, and every curve point after that is a bounded-heap
-    * re-rank over the CHECKPOINTED candidate frame (queries×candidates
-    * sized, not corpus sized). Counts and the floor-div milli recall
-    * are exact integers — nothing on the curve is a float. */
+    * Scale design: this is [[retrievalMetricsCurve]] with its ranking
+    * columns pruned (Catalyst drops the unused MRR/nDCG aggregates).
+    * Probe selection runs once at max(nprobes) with the probe RANK
+    * carried through — the nprobe=p candidate set is exactly the rows
+    * with probe_rnk ≤ p (probe lists are nested by construction: same
+    * order, deeper cut), so the corpus is scanned once for assignment,
+    * once for candidate scoring, once for the exact truth; then ONE
+    * [[sweepTopK]] ranks every curve point (queries×candidates×points
+    * sized, not corpus sized) and ONE [[recallTally]] counts the hits.
+    * Counts and the floor-div milli recall are exact integers —
+    * nothing on the curve is a float. */
   def nprobeRecallCurve(s: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, nlist: Int = 32,
-      nprobes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    require(nprobes.nonEmpty && nprobes.forall(_ >= 1))
-    val maxNp = nprobes.max
-    val emb = t(s, dir, "embeddings")
-    val cent = seededCentroids(emb, nlist)
-    val corpus = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val assign = seededAssign(corpus, cent)
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = probeCells(s, queries, cent, maxNp)
-    // every curve point re-ranks this one frame; each c_id has ONE
-    // cell and each (q, cell) one probe rank, so (q, c) rows are
-    // already unique
-    val scored = assign.join(broadcast(probes), "cell")
-      .filter(col("q_id") =!= col("c_id"))
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("c_id"), col("probe_rnk"),
-        r4(cosine(col("q_emb"), col("c_emb"))).as("sim"))
-      .localCheckpoint(eager = false)
-    val truth = nativeTopK(s, dir, nQueries, k)
-      .select("q_id", "c_id").localCheckpoint(eager = false)
-    val perNp = nprobes.map { np =>
-      topKPerQuery(s, scored.filter(col("probe_rnk") <= np), k, sorted = false)
-        .join(truth, Seq("q_id", "c_id"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(np.toLong).as("nprobe"), col("n_hits"))
-    }.reduce(_ union _)
-    perNp
-      .crossJoin(broadcast(truth.groupBy().agg(count(lit(1)).as("n_truth"))))
-      .withColumn("recall_milli", expr("n_hits * 1000 div n_truth"))
-      .orderBy("nprobe")
-  }
+      nprobes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame =
+    retrievalMetricsCurve(s, dir, nQueries, k, nlist, nprobes)
+      .select("nprobe", "n_hits", "n_truth", "recall_milli")
 
   /** Compression recall audit (s19) — the s17 measured-advisory
     * pattern applied across the QUANTIZATION axis instead of the
@@ -1997,15 +2007,15 @@ object Similarity {
     *
     * Scale design: each member pipeline keeps its own certified scale
     * shape (broadcast codebooks/params, corpus never shuffled, bounded-
-    * heap ranking); the audit adds only k·nQueries-row joins against
-    * the truth set. Advisory cost = the sum of its members — linear
-    * path throughout, unlike the declared-quadratic d03/d13
-    * validators. Reference analog: the group/agg chains of
+    * heap ranking); the audit tags the members' k·nQueries-row outputs
+    * with their method, unions them once and counts them in ONE
+    * [[recallTally]] against the truth set. Advisory cost = the sum of
+    * its members — linear path throughout, unlike the declared-
+    * quadratic d03/d13 validators. Reference analog: the group/agg chains of
     * streamable/stream.py:230-326, specialized to recall accounting. */
   def quantRecallAudit(s: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5): DataFrame = {
-    val truth = nativeTopK(s, dir, nQueries, k)
-      .select("q_id", "c_id").localCheckpoint(eager = false)
+    val truth = nativeTopK(s, dir, nQueries, k).select("q_id", "c_id")
     // ONE PQ encode pass feeds both quantization members (s09's full
     // ADC scan and s18's cell-pruned one): the per-vector code table
     // is an index-build artifact, identical for both, so the audit
@@ -2014,18 +2024,14 @@ object Similarity {
       m = PqM, codebookSize = PqCodebookSize, dimParam = PqDimParam)
     val sharedPq = Some((codesRaw.localCheckpoint(eager = false),
       qtabRaw.localCheckpoint(eager = false)))
-    val methods = Seq(
-      "s08_sq" -> sqTopK(s, dir, nQueries, k),
-      "s09_pq" -> pqTopK(s, dir, nQueries, k, shared = sharedPq),
-      "s18_ivfpq" -> ivfPqTopK(s, dir, nQueries, k, shared = sharedPq))
-    val per = methods.map { case (name, df) =>
-      df.select("q_id", "c_id").join(truth, Seq("q_id", "c_id"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(name).as("method"), col("n_hits"))
-    }.reduce(_ union _)
-    per
-      .crossJoin(broadcast(truth.groupBy().agg(count(lit(1)).as("n_truth"))))
-      .withColumn("recall_milli", expr("n_hits * 1000 div n_truth"))
+    def tagged(method: String, df: DataFrame): DataFrame =
+      df.select(lit(method).as("point"), col("q_id"), col("c_id"), col("rnk"))
+    val ranked = tagged("s08_sq", sqTopK(s, dir, nQueries, k))
+      .union(tagged("s09_pq", pqTopK(s, dir, nQueries, k, shared = sharedPq)))
+      .union(tagged("s18_ivfpq", ivfPqTopK(s, dir, nQueries, k, shared = sharedPq)))
+    recallTally(truth, ranked, Seq("s08_sq", "s09_pq", "s18_ivfpq").map(lit), k)
+      .select(col("point").as("method"), col("n_hits"), col("n_truth"),
+        col("recall_milli"))
       .orderBy("method")
   }
 
@@ -2048,11 +2054,12 @@ object Similarity {
     * and the final figures are floor-div millis/micros — nothing on
     * the curve is a float, so the DuckDB oracle hash-matches.
     *
-    * Scale design is s17's: ONE corpus assignment pass at
+    * Scale design (s17 shares it): ONE corpus assignment pass at
     * max(nprobes) with the probe rank carried through, one exact
-    * truth pass, then every curve point is a bounded-heap re-rank of
-    * the checkpointed candidate frame (queries×candidates sized)
-    * followed by k·nQueries-row metric joins. Reference analog:
+    * truth pass, then ONE [[sweepTopK]] ranking over (nprobe, q_id)
+    * groups — a candidate takes part at every depth whose probe cut
+    * holds its cell — and ONE [[recallTally]] aggregation of every
+    * depth's hits, first-hit ranks and gains. Reference analog:
     * streamable/stream.py:230-326 group/agg chains, specialized to
     * ranking-metric accounting. */
   def retrievalMetricsCurve(s: SparkSession, dir: String, nQueries: Int = 10,
@@ -2072,38 +2079,17 @@ object Similarity {
       .join(broadcast(queries), "q_id")
       .select(col("q_id"), col("c_id"), col("probe_rnk"),
         r4(cosine(col("q_emb"), col("c_emb"))).as("sim"))
-      .localCheckpoint(eager = false)
-    val truth = nativeTopK(s, dir, nQueries, k)
-      .select("q_id", "c_id").localCheckpoint(eager = false)
-    val gains = ndcgGainsMicro(k)
-    val idcgMicro = gains.sum
-    // rank → discount lookup as an array literal (ranks are 1..k)
-    val gainCol = element_at(
-      array(gains.map(g => lit(g)): _*), col("rnk").cast("int"))
-    val perNp = nprobes.map { np =>
-      val hits = topKPerQuery(s, scored.filter(col("probe_rnk") <= np), k,
-          sorted = false)
-        .join(truth, Seq("q_id", "c_id"))
-      // per-query first-hit rank and DCG; a query with no hits simply
-      // contributes nothing to either sum (rows absent, not null)
-      val perQ = hits.groupBy("q_id")
-        .agg(count(lit(1)).as("q_hits"), min("rnk").as("first_rnk"),
-          sum(gainCol).as("dcg_micro"))
-      perQ.agg(
-          coalesce(sum("q_hits"), lit(0L)).as("n_hits"),
-          coalesce(sum(expr("1000000 div first_rnk")), lit(0L)).as("rr_sum"),
-          coalesce(sum("dcg_micro"), lit(0L)).as("dcg_sum"))
-        .select(lit(np.toLong).as("nprobe"), col("n_hits"),
-          col("rr_sum"), col("dcg_sum"))
-    }.reduce(_ union _)
-    perNp
-      .crossJoin(broadcast(truth.groupBy().agg(count(lit(1)).as("n_truth"))))
-      .withColumn("recall_milli", expr("n_hits * 1000 div n_truth"))
+    val truth = nativeTopK(s, dir, nQueries, k).select("q_id", "c_id")
+    val idcgMicro = ndcgGainsMicro(k).sum
+    recallTally(truth,
+        sweepTopK(scored, k,
+          nprobes.map(np => lit(np.toLong) -> (col("probe_rnk") <= np))),
+        nprobes.map(np => lit(np.toLong)), k)
       .withColumn("mrr_micro", expr(s"rr_sum div $nQueries"))
       .withColumn("ndcg_milli",
         expr(s"dcg_sum * 1000 div (${nQueries.toLong} * $idcgMicro)"))
-      .select("nprobe", "n_hits", "n_truth", "recall_milli", "mrr_micro",
-        "ndcg_milli")
+      .select(col("point").as("nprobe"), col("n_hits"), col("n_truth"),
+        col("recall_milli"), col("mrr_micro"), col("ndcg_milli"))
       .orderBy("nprobe")
   }
 
@@ -2168,8 +2154,9 @@ object Similarity {
     * justifies s24's table-count halving: recall@k against the exact
     * truth for the SAME 4 tables probed exactly (`single_t4`) vs with
     * hamming-1 perturbation (`multi_t4`). One bucket pass, one
-    * scoring pass (the min_dist=0 subset IS the single-probe set),
-    * two bounded-heap re-ranks of the checkpointed candidates. */
+    * scoring pass, ONE [[sweepTopK]] ranking in which every candidate
+    * is visible to `multi_t4` and the min_dist=0 subset (the
+    * single-probe set) to `single_t4`, and ONE [[recallTally]]. */
   def multiprobeRecallAudit(s: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, bits: Int = 4, tables: Int = 4): DataFrame = {
     val emb = t(s, dir, "embeddings")
@@ -2181,21 +2168,13 @@ object Similarity {
       .join(corpus, "c_id")
       .select(col("q_id"), col("c_id"), col("min_dist"),
         r4(cosine(col("q_emb"), col("c_emb"))).as("sim"))
-      .localCheckpoint(eager = false)
-    val truth = nativeTopK(s, dir, nQueries, k)
-      .select("q_id", "c_id").localCheckpoint(eager = false)
+    val truth = nativeTopK(s, dir, nQueries, k).select("q_id", "c_id")
     val modes = Seq(
-      "multi_t4" -> scored,
-      "single_t4" -> scored.filter(col("min_dist") === 0))
-    val per = modes.map { case (name, cand) =>
-      topKPerQuery(s, cand, k, sorted = false)
-        .join(truth, Seq("q_id", "c_id"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(name).as("mode"), col("n_hits"))
-    }.reduce(_ union _)
-    per
-      .crossJoin(broadcast(truth.groupBy().agg(count(lit(1)).as("n_truth"))))
-      .withColumn("recall_milli", expr("n_hits * 1000 div n_truth"))
+      lit("multi_t4") -> lit(true),
+      lit("single_t4") -> (col("min_dist") === 0))
+    recallTally(truth, sweepTopK(scored, k, modes), modes.map(_._1), k)
+      .select(col("point").as("mode"), col("n_hits"), col("n_truth"),
+        col("recall_milli"))
       .orderBy("mode")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
@@ -39,6 +40,43 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         if (had) x.extraStrategies.map(s => if (s eq off) strategy else s)
         else x.extraStrategies.filterNot(_ eq off)
     }
+  }
+
+  /** Runs `body` with each `kv` conf set; afterwards each key is back
+    * to its earlier value, or unset if it had none. */
+  protected def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val conf = spark.conf
+    val prev = kv.map { case (k, _) => k -> conf.getOption(k) }
+    try { kv.foreach { case (k, v) => conf.set(k, v) }; body }
+    finally prev.foreach { case (k, p) => p.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
+  /** The jobs started while `body` runs, each as its stage names joined
+    * by ';'. A listener records every job start; one sentinel RDD
+    * action then flushes the asynchronous listener bus (events arrive
+    * in order, so once the sentinel's start has landed every earlier
+    * event has too, on every listener), and its own job is left out. */
+  protected def jobsDuring(body: => Unit): Seq[String] = {
+    val sentinel = s"jobsDuring-sentinel-${java.util.UUID.randomUUID}"
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        names.add(js.stageInfos.map(_.name).mkString(";")); ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setCallSite(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearCallSite()
+      def seen = names.toArray(Array.empty[String]).toSeq
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!seen.exists(_.contains(sentinel)) && System.nanoTime < deadline)
+        Thread.sleep(20)
+      assert(seen.exists(_.contains(sentinel)), "sentinel job event never arrived")
+      seen.filterNot(_.contains(sentinel))
+    } finally sc.removeSparkListener(listener)
   }
 
   /** A case that runs with `strategy` out of the session's planner. */

@@ -127,16 +127,6 @@ class NearestCellSpec extends SparkSpec {
       .repartition(3)
   }
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val conf = spark.conf
-    val prev = kv.map { case (k, _) => k -> conf.getOption(k) }
-    try { kv.foreach { case (k, v) => conf.set(k, v) }; body }
-    finally prev.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
-
   private val modes = Seq(
     "CODEGEN_ONLY" -> Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
       "spark.sql.codegen.fallback" -> "false"),

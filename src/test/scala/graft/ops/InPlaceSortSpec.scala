@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -22,44 +21,12 @@ class InPlaceSortSpec extends SparkSpec {
     case p => p
   }).toString.toLowerCase
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** Jobs started while `body` runs (listener plus one sentinel RDD
-    * action, the WarmStartSpec pattern). */
-  private def jobsDuring(body: => Unit): Int = {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        names.add(js.stageInfos.map(_.name).mkString(";")); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      def sentinelSeen() =
-        names.toArray(Array.empty[String]).exists(_.contains("InPlaceSortSpec"))
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!sentinelSeen() && System.nanoTime < deadline) Thread.sleep(20)
-      assert(sentinelSeen(), "sentinel job event never arrived")
-      names.size - 1
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   testWithout(OneSplitScanStrategy)(
     "m01: the final plan sorts in one task with no range exchange, in " +
     "2 jobs, with the rows the range-shuffled sort gives") {
     val df = m01()
     var rows: Seq[org.apache.spark.sql.Row] = Nil
-    val jobs = jobsDuring { rows = df.collect().toSeq }
+    val jobs = jobsDuring { rows = df.collect().toSeq }.size
     val plan = finalPlan(df)
     assert(!plan.contains("rangepartitioning"), plan)
     assert(plan.contains("coalesce 1"), plan)

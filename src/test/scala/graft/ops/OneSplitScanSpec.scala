@@ -3,7 +3,6 @@ package graft.ops
 import java.nio.file.Files
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -24,38 +23,6 @@ class OneSplitScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def coalesced(p: SparkPlan) = collect(p) { case c: CoalesceExec => c }
   private def scans(p: SparkPlan) = collect(p) { case s: FileSourceScanExec => s }
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** Jobs started while `body` runs (listener plus one sentinel RDD
-    * action that flushes the asynchronous listener bus). */
-  private def jobsDuring(body: => Unit): Int = {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        names.add(js.stageInfos.map(_.name).mkString(";")); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      def sentinelSeen() =
-        names.toArray(Array.empty[String]).exists(_.contains("OneSplitScanSpec"))
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!sentinelSeen() && System.nanoTime < deadline) Thread.sleep(20)
-      assert(sentinelSeen(), "sentinel job event never arrived")
-      names.size - 1
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** The rows `name` gives with the strategy out of the planner, which
     * then plans at least one shuffle. */
   private def rowsWithout(name: String): Seq[Row] = withoutStrategy(OneSplitScanStrategy) {
@@ -69,7 +36,7 @@ class OneSplitScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     test(s"$name at sf0.001: no shuffle, one job, the rows planned without the strategy") {
       val df = query(name)
       var rows = Seq.empty[Row]
-      val jobs = jobsDuring { rows = df.collect().toSeq }
+      val jobs = jobsDuring { rows = df.collect().toSeq }.size
       val plan = df.queryExecution.executedPlan
       assert(shuffles(plan).isEmpty, plan)
       assert(coalesced(plan).nonEmpty, plan)

@@ -818,6 +818,34 @@ class PlanSpec extends SparkSpec {
     } yield s"${f.getName}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("recall curves rank every curve point in one topk_rows aggregate, " +
+    "whatever the number of points") {
+    // final-mode aggregates only: one per ranking, not per phase
+    def rankings(df: org.apache.spark.sql.DataFrame): Int =
+      AqeNodes.collect(df.queryExecution.executedPlan) {
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+            if a.aggregateExpressions.exists(e =>
+              e.mode == org.apache.spark.sql.catalyst.expressions.aggregate.Final &&
+                e.aggregateFunction.isInstanceOf[TopKRowsAgg]) => a
+      }.size
+    val two = Seq(1, 2)
+    val four = Seq(1, 2, 4, 8)
+    Seq(
+      "s17" -> ((ps: Seq[Int]) => Similarity.nprobeRecallCurve(spark, sf0001, nprobes = ps)),
+      "s21" -> ((ps: Seq[Int]) => Similarity.cprobeRecallCurve(spark, sf0001, cprobes = ps)),
+      "s23" -> ((ps: Seq[Int]) => Similarity.retrievalMetricsCurve(spark, sf0001, nprobes = ps))
+    ).foreach { case (name, curve) =>
+      val (n2, n4) = (rankings(curve(two)), rankings(curve(four)))
+      assert(n2 > 0 && n2 == n4, s"$name: $n2 rankings at 2 points, $n4 at 4")
+    }
+    // s25's two modes are fixed: its plan holds the truth ranking (s04's)
+    // and ONE ranking of the multiprobe candidates (s24's), not one per mode
+    val s25 = rankings(Similarity.multiprobeRecallAudit(spark, sf0001))
+    val s04 = rankings(Similarity.nativeTopK(spark, sf0001))
+    val s24 = rankings(Similarity.multiprobeLshTopK(spark, sf0001))
+    assert(s04 > 0 && s24 > 0 && s25 == s04 + s24, s"s25 $s25, s04 $s04, s24 $s24")
+  }
 }
 
 /** Walks adaptive plans into their query stages. */

@@ -3,7 +3,6 @@ package graft.ops
 import java.nio.file.Files
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -15,30 +14,6 @@ import org.apache.spark.sql.types.LongType
 class TablesSpec extends SparkSpec {
 
   private lazy val tmp = Files.createTempDirectory("graft-tables").toString
-
-  /** Jobs started while `body` runs, counted with a listener and
-    * flushed by one sentinel RDD action (the WarmStartSpec pattern:
-    * listener events arrive in order, so once the sentinel's JobStart
-    * has landed every earlier one has too). */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        names.add(js.stageInfos.map(_.name).mkString(";")); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      def sentinelSeen() =
-        names.toArray(Array.empty[String]).exists(_.contains("TablesSpec"))
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!sentinelSeen() && System.nanoTime < deadline) Thread.sleep(20)
-      assert(sentinelSeen(), "sentinel job event never arrived")
-      names.toArray(Array.empty[String]).toSeq.filterNot(_.contains("TablesSpec"))
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   /** A one-row events table whose `ts` is TIMESTAMP(NANOS), written
     * with the parquet writer directly (Spark writes no NANOS). */

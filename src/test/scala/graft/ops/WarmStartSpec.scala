@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The warm-start drill (r18 verdict stretch): the per-artifact
   * "train once, serve forever" claims (t22 classifier, t24 LM, s11
@@ -33,17 +32,7 @@ class WarmStartSpec extends SparkSpec {
     // ensure* has no session-level memo left to help it; everything
     // must resolve through path + marker alone)
     val ns = spark.newSession()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        names.add(js.stageInfos.map(_.name).mkString(";"))
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       Similarity.ensureIvfIndex(ns, sf0001)
       Similarity.ensureCompactedIvfIndex(ns, sf0001)
       Similarity.ensureCodebook(ns, sf0001)
@@ -53,26 +42,9 @@ class WarmStartSpec extends SparkSpec {
       TextAnalysis.ensureQualityModel(ns, sf0001)
       TextAnalysis.ensureBigramLmModel(ns, sf0001)
       TextAnalysis.ensureBpeModel(ns, sf0001)
-      // flush the ASYNC listener bus with one sentinel action: events
-      // are delivered in order, so once the sentinel's JobStart has
-      // landed, any earlier JobStart would have landed before it. A
-      // plain RDD action — a SQL count() under AQE is itself ≥2 jobs
-      // (shuffle-stage materialization via CompletableFuture + final),
-      // which would make the "exactly the sentinel" bound ambiguous
-      ns.sparkContext.parallelize(Seq(1), 1).count()
-      // wait for the SENTINEL'S OWN event, not just any JobStart — if
-      // a regression ran one hidden job during the ensures, its event
-      // could land first and satisfy a jobs>0 wait while the
-      // sentinel's was still queued (the window the flush closes)
-      def sentinelSeen() =
-        names.toArray(Array.empty[String]).exists(_.contains("WarmStartSpec"))
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!sentinelSeen() && System.nanoTime < deadline) Thread.sleep(20)
-      assert(sentinelSeen(), "sentinel job event never arrived")
-      assert(jobs.get == 1,
-        s"artifact resolution must run ZERO jobs against a populated " +
-          s"warehouse (expected only the sentinel; saw ${jobs.get}: " +
-          s"${names.toArray(Array.empty[String]).mkString(" // ")})")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty,
+      s"artifact resolution must run ZERO jobs against a populated " +
+        s"warehouse (saw ${jobs.size}: ${jobs.mkString(" // ")})")
   }
 }

@@ -20,13 +20,6 @@ class OrderedSpec extends SparkSpec {
     scala.util.Random.shuffle((0 until n).toList).toDF("v")
   }
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val conf = spark.conf
-    val prev = kv.map { case (k, _) => k -> conf.getOption(k) }
-    kv.foreach { case (k, v) => conf.set(k, v) }
-    try body finally prev.foreach { case (k, p) => p.fold(conf.unset(k))(conf.set(k, _)) }
-  }
-
   /** Rows per partition of the frame's physical output. */
   private def partitionSizes(d: DataFrame): Seq[Int] =
     d.queryExecution.toRdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
